@@ -228,5 +228,15 @@ expect 1 ladder_abort env GRAFT_LADDER_SMOKE=fail scripts/r15_ladder.sh
 grep -q "ABORT" "$T/ladder_abort.log" || {
   echo "[FAIL] ladder_abort: no ABORT line"; FAIL=1; }
 
+# --- forkcount: the shims must count a deliberate chmod, and read 0 for
+#     a command that starts none
+touch "$T/fc_file"
+expect 0 forkcount_chmod scripts/forkcount.sh chmod 600 "$T/fc_file"
+grep -qx "1 chmod" "$T/forkcount_chmod.log" || {
+  echo "[FAIL] forkcount_chmod: the chmod was not counted"; FAIL=1; }
+expect 0 forkcount_none scripts/forkcount.sh true
+grep -qx "0 total" "$T/forkcount_none.log" || {
+  echo "[FAIL] forkcount_none: counted processes that never started"; FAIL=1; }
+
 echo "== selftest $([ $FAIL -eq 0 ] && echo OK || echo FAILED) =="
 exit $FAIL

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at the given SF dir and
   * prints ONE JSON line. Each query is timed over `SPARK_GRAFT_BENCH_RUNS`
@@ -19,12 +18,8 @@ object Bench {
     // over the local master — the partition-count-invariance run, for
     // TIME, not just correctness (VERDICT r9 #5).
     val prod = sys.env.get("SPARK_GRAFT_PROFILE").contains("production")
-    val builder0 = SparkSession.builder()
+    val builder0 = GraftSession.harness(s"local[$cpus]", cpus)
       .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     val spark =
       (if (prod) GraftSession.withProductionConfs(builder0) else builder0)
         .getOrCreate()

@@ -144,14 +144,8 @@ object ClusterGate {
   private val ExecutorMem = if (prodProfile) "3584m" else "1536m"
 
   private def buildSession(master: String): SparkSession = {
-    val b0 = SparkSession.builder()
+    val b0 = GraftSession.harness(master, "8").appName(s"graft-clustergate-$master")
       .withExtensions(new graft.functions.GraftExtensions)
-      .master(master)
-      .appName(s"graft-clustergate-$master")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     // production last, so its 4096 shuffle width overrides the 8
     val b = if (prodProfile) GraftSession.withProductionConfs(b0) else b0
     val withCluster = if (master.startsWith("local-cluster")) {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: print the formatted plan (and, after execution, the
   * AQE-final plan) for named SparkEntry queries. Usage:
   *   Explain <sfDir> <querySubstring> [initial]
@@ -14,14 +12,9 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val pat = if (args.length > 1) args(1) else ""
     val runFirst = !(args.length > 2 && args(2) == "initial")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = GraftSession.harness(s"local[$cpus]", cpus)
+      .withExtensions(new graft.functions.GraftExtensions).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(_._1.contains(pat))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,13 +16,8 @@ object Verify {
     // conf block (4096 shuffle partitions + AQE coalesce/skew + RocksDB)
     // over the local master — the partition-count-invariance run.
     val prod = sys.env.get("SPARK_GRAFT_PROFILE").contains("production")
-    val builder0 = SparkSession.builder()
+    val builder0 = GraftSession.harness(s"local[$cpus]", cpus)
       .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     val spark =
       (if (prod) GraftSession.withProductionConfs(builder0) else builder0)
         .getOrCreate()

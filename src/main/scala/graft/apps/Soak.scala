@@ -489,16 +489,12 @@ object Soak {
     // overridable via SPARK_GRAFT_SOAK_PARTITIONS so the
     // state-partition axis can be probed at what one process can hold.
     val prod = sys.env.get("SPARK_GRAFT_PROFILE").contains("production")
-    val b0 = SparkSession.builder()
+    val parts = sys.env.getOrElse("SPARK_GRAFT_SOAK_PARTITIONS",
+      if (prod) "4096" else "8")
+    val b0 = graft.GraftSession.harness("local[8]", parts).appName("graft-soak")
       .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[8]")
-      .appName("graft-soak")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     val b = if (prod) graft.GraftSession.withProductionConfs(b0) else b0
-    b.config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_SOAK_PARTITIONS",
-        if (prod) "4096" else "8"))
+    b.config("spark.sql.shuffle.partitions", parts)
     stateStoreConfs.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -44,16 +44,24 @@ object DimRouter {
     * Phoenix upsert — last write wins). Binlog order columns
     * (`_ts/_xid/_xoffset`) are RETAINED so the writer can merge against
     * previously persisted rows (Sinks.writeDim) — without them an
-    * overwrite would lose every dim row not re-sent in the current batch. */
+    * overwrite would lose every dim row not re-sent in the current batch.
+    *
+    * The batch is materialized once and only tables with rows in it get
+    * a frame: a `foreachBatch` frame re-reads its source on every action,
+    * and each table's frame is acted on more than once. */
   def dimFrames(routed: DataFrame, rules: Seq[TableProcess])
-      : Map[String, DimFrame] =
-    rules.map { rule =>
+      : Map[String, DimFrame] = {
+    val batch = routed.localCheckpoint()
+    val present = batch.select("sink_table").distinct().collect()
+      .map(_.getString(0)).toSet
+    rules.filter(r => present(r.sinkTable)).map { rule =>
       val cols = rule.sinkColumns.map(c => col("data").getItem(c).as(c))
-      val base = routed.filter(col("sink_table") === rule.sinkTable)
+      val base = batch.filter(col("sink_table") === rule.sinkTable)
         .select(cols :+ col("ts").as("_ts") :+ col("xid").as("_xid") :+
           col("xoffset").as("_xoffset"): _*)
       rule.sinkTable -> DimFrame(dedupLatest(base, rule.sinkPk), rule.sinkPk)
     }.toMap
+  }
 
   /** Keep-latest per pk in binlog order (ts, xid, xoffset). */
   def dedupLatest(df: DataFrame, pk: String): DataFrame =
