@@ -238,5 +238,16 @@ expect 0 forkcount_none scripts/forkcount.sh true
 grep -qx "0 total" "$T/forkcount_none.log" || {
   echo "[FAIL] forkcount_none: counted processes that never started"; FAIL=1; }
 
+# --- threadpeak: a child that starts 8 threads must read at least 9 (its
+#     main thread too), and `true` must read exactly 1
+peak_threads() { awk -v n="$2" '$2 == n { print $4 }' "$T/$1.log" | sort -n | tail -1; }
+expect 0 threadpeak_eight scripts/threadpeak.sh python3 -c \
+  'import threading, time; ts = [threading.Thread(target=time.sleep, args=(1,)) for _ in range(8)]; [t.start() for t in ts]; [t.join() for t in ts]'
+[ "$(peak_threads threadpeak_eight python3)" -ge 9 ] 2>/dev/null || {
+  echo "[FAIL] threadpeak_eight: 8 started threads not seen"; FAIL=1; }
+expect 0 threadpeak_true scripts/threadpeak.sh true
+[ "$(peak_threads threadpeak_true true)" = 1 ] || {
+  echo "[FAIL] threadpeak_true: want 1 thread"; FAIL=1; }
+
 echo "== selftest $([ $FAIL -eq 0 ] && echo OK || echo FAILED) =="
 exit $FAIL

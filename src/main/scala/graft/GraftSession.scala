@@ -70,14 +70,18 @@ object GraftSession {
     * round (perfbench, seed 1) started 6,161 such processes; it now
     * starts none.
     *
-    * What stays identical: the `.crc` sidecars and where Hadoop verifies
-    * them, Spark's state-file checksums, the no-overwrite rename check,
-    * the permission bits (a sticky bit and every symlink still take
-    * Hadoop's own code), atomic publish by rename, and every other
-    * scheme. Without this, the service loader resolves the `file:`
-    * `FileSystem` to Hive's ProxyLocalFileSystem (hive-exec is in Spark's
-    * jars): Hadoop's `LocalFileSystem` whose `rename` returns false onto
-    * an existing file instead of replacing it. The engine renames only
+    * What stays identical: the `.crc` sidecars, Spark's state-file
+    * checksums, the no-overwrite rename check, the permission bits (a
+    * sticky bit and every symlink still take Hadoop's own code), atomic
+    * publish by rename, and every other scheme. What is stricter:
+    * `FileContext.open(path)` verifies the `.crc` sidecar, which stock
+    * Hadoop skips there, so a flipped byte in an offset, commit or
+    * sink-log file throws `ChecksumException` instead of reading back,
+    * and one in a state file throws it before Spark's own check.
+    * Without this, the service loader resolves the `file:` `FileSystem`
+    * to Hive's ProxyLocalFileSystem (hive-exec is in Spark's jars):
+    * Hadoop's `LocalFileSystem` whose `rename` returns false onto an
+    * existing file instead of replacing it. The engine renames only
     * directories through that API (`Sinks.writeDim`). Hadoop's
     * `FileSystem` cache is keyed without the conf, so this must be set
     * before the JVM first obtains a `file:` file system. */

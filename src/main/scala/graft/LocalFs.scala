@@ -7,8 +7,8 @@ import java.nio.file.attribute.PosixFilePermission
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream,
+  FileStatus, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -39,7 +39,10 @@ class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocalFileSy
 
 /** The `FileContext` API (`fs.AbstractFileSystem.file.impl`), which
   * Spark's checkpoint file manager uses: Hadoop's `LocalFs` (`ChecksumFs`
-  * over `RawLocalFs`) with the fork-free raw file system underneath. */
+  * over `RawLocalFs`) with the fork-free raw file system underneath.
+  * `open(path)` verifies the `.crc` sidecar, as `open(path, bufferSize)`
+  * does: Hadoop's `FilterFs.open(path)` reads the raw file unverified,
+  * and that is the call Spark's offset, commit and sink-log reads make. */
 class ForkFreeLocalFs(uri: URI, conf: Configuration)
     extends ChecksumFs(new DelegateToFileSystem(uri,
       new ForkFreeRawLocalFileSystem, conf, "file", false) {
@@ -50,4 +53,7 @@ class ForkFreeLocalFs(uri: URI, conf: Configuration)
       override def getServerDefaults: FsServerDefaults =
         LocalConfigKeys.getServerDefaults()
       override def isValidName(src: String): Boolean = true
-    })
+    }) {
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}

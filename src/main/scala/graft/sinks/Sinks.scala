@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.Row
+import graft.dim.DimRouter.DimFrame
 
 /** Sink builders (SURVEY.md §2.2 K1–K5). Every streaming writer takes a
   * checkpoint dir — Structured Streaming's always-on exactly-once
@@ -61,56 +62,54 @@ object Sinks {
     * pk (binlog order carried in `_ts/_xid/_xoffset`), rewrite. A plain
     * overwrite of the batch frame would delete every dim row not re-sent
     * in the current batch — the opposite of the Phoenix `upsert into`
-    * this replaces. Tables with no rows in the batch are left untouched.
-    * (With a table format that supports MERGE INTO, this becomes one
-    * statement; parquet needs the read-union-rewrite.) */
-  def writeDim(frames: Map[String, graft.dim.DimRouter.DimFrame],
-      rootPath: String): Unit =
-    frames.foreach { case (table, dimFrame) =>
-      val spark = dimFrame.frame.sparkSession
-      // checkpoint ONCE: both the emptiness test and the merge read it —
-      // otherwise the dedup window plan executes twice per batch
-      val batch = dimFrame.frame.localCheckpoint()
-      if (!batch.isEmpty) {
-        val path = new org.apache.hadoop.fs.Path(s"$rootPath/$table")
-        // Hadoop FS, not java.io.File: the dim root is HDFS/S3 in
-        // production and a local File check would silently skip the merge
-        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val tmp = new org.apache.hadoop.fs.Path(s"$rootPath/.${table}_tmp")
-        val old = new org.apache.hadoop.fs.Path(s"$rootPath/.${table}_old")
-        // Hadoop rename signals failure by RETURNING FALSE, not throwing;
-        // proceeding after a silent failure could delete the only
-        // surviving snapshot, so every rename in the swap is checked
-        def mustRename(from: org.apache.hadoop.fs.Path,
-            to: org.apache.hadoop.fs.Path): Unit =
-          if (!fs.rename(from, to)) throw new IllegalStateException(
-            s"dim swap aborted: rename $from -> $to failed")
-        // crash recovery: a previous swap may have parked the live
-        // snapshot at `old` and died before promoting `tmp` — restore it
-        if (!fs.exists(path) && fs.exists(old)) mustRename(old, path)
-        val merged =
-          if (fs.exists(path)) {
-            val existing = spark.read.parquet(path.toString)
-            // allowMissingColumns: survives config evolution (sink_columns
-            // changes) and upgrades over older snapshots
-            graft.dim.DimRouter.dedupLatest(
-              existing.unionByName(batch, allowMissingColumns = true),
-              dimFrame.pk)
-          } else batch
-        // write-to-temp, park-old, promote, then delete old: at every
-        // point a complete snapshot exists on disk (`path`, or `old`+`tmp`
-        // after the park), so a crash never loses the dimension — unlike
-        // delete-then-rename, whose window between delete and rename had
-        // no live copy. The localCheckpoint materializes the merged frame
-        // BEFORE the old snapshot is touched. A transactional table
-        // format (MERGE INTO) is the real fix when available.
-        fs.delete(tmp, true)
-        merged.localCheckpoint().write.parquet(tmp.toString)
-        fs.delete(old, true)
-        if (fs.exists(path)) mustRename(path, old)
-        mustRename(tmp, path)
-        fs.delete(old, true)
-      }
+    * this replaces. (With a table format that supports MERGE INTO, this
+    * becomes one statement; parquet needs the read-union-rewrite.)
+    *
+    * Precondition: every frame has rows. A table with no rows in the
+    * batch is left untouched by leaving it out of `frames`, as
+    * `DimRouter.dimFrames` does; an empty frame would rewrite its
+    * snapshot unchanged, or write an empty one. Each frame is read once,
+    * by the write. */
+  def writeDim(frames: Map[String, DimFrame], rootPath: String): Unit =
+    frames.foreach { case (table, DimFrame(batch, pk)) =>
+      val spark = batch.sparkSession
+      val path = new org.apache.hadoop.fs.Path(s"$rootPath/$table")
+      // Hadoop FS, not java.io.File: the dim root is HDFS/S3 in
+      // production and a local File check would silently skip the merge
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val tmp = new org.apache.hadoop.fs.Path(s"$rootPath/.${table}_tmp")
+      val old = new org.apache.hadoop.fs.Path(s"$rootPath/.${table}_old")
+      // Hadoop rename signals failure by RETURNING FALSE, not throwing;
+      // proceeding after a silent failure could delete the only
+      // surviving snapshot, so every rename in the swap is checked
+      def mustRename(from: org.apache.hadoop.fs.Path,
+          to: org.apache.hadoop.fs.Path): Unit =
+        if (!fs.rename(from, to)) throw new IllegalStateException(
+          s"dim swap aborted: rename $from -> $to failed")
+      // crash recovery: a previous swap may have parked the live
+      // snapshot at `old` and died before promoting `tmp` — restore it
+      if (!fs.exists(path) && fs.exists(old)) mustRename(old, path)
+      val merged =
+        if (fs.exists(path)) {
+          val existing = spark.read.parquet(path.toString)
+          // allowMissingColumns: survives config evolution (sink_columns
+          // changes) and upgrades over older snapshots
+          graft.dim.DimRouter.dedupLatest(
+            existing.unionByName(batch, allowMissingColumns = true), pk)
+        } else batch
+      // write-to-temp, park-old, promote, then delete old: at every
+      // point a complete snapshot exists on disk (`path`, or `old`+`tmp`
+      // after the park), so a crash never loses the dimension — unlike
+      // delete-then-rename, whose window between delete and rename had
+      // no live copy. The write (which reads `path`) finishes before any
+      // rename touches it. A transactional table format (MERGE INTO) is
+      // the real fix when available.
+      fs.delete(tmp, true)
+      merged.write.parquet(tmp.toString)
+      fs.delete(old, true)
+      if (fs.exists(path)) mustRename(path, old)
+      mustRename(tmp, path)
+      fs.delete(old, true)
     }
 
   /** Bucketed table writer — the co-located-join primitive for repeated

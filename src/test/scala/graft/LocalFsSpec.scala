@@ -136,15 +136,17 @@ class LocalFsSpec extends AnyFunSuite {
       def error(in: => java.io.InputStream) =
         Try { val s = in; try s.readAllBytes() finally s.close() }
           .failed.toOption.map(_.getClass)
-      // Hadoop's FilterFs.open(path) skips ChecksumFs, so FileContext
-      // verifies only with an explicit buffer size; Spark's checkpoint
-      // reads rely on its own state-file checksums (next test)
       (crcs, error(fs.open(viaFs)), error(fc.open(viaFc, 4096)), error(fc.open(viaFc)))
     }
     assert(stock._1.forall(_.nonEmpty))
     assert(stock._2.contains(classOf[ChecksumException]))
     assert(stock._3.contains(classOf[ChecksumException]))
-    assert(forkFree == stock)
+    // stock Hadoop's FilterFs.open(path) skips ChecksumFs and reads the
+    // flipped byte back; the fork-free FileContext verifies it, as Spark's
+    // offset, commit and sink-log reads need
+    assert(stock._4.isEmpty)
+    assert(forkFree._4.contains(classOf[ChecksumException]))
+    assert(forkFree.copy(_4 = stock._4) == stock)
   }
 
   test("a stateful query restarted on its checkpoint resumes as under stock Hadoop") {
@@ -159,7 +161,7 @@ class LocalFsSpec extends AnyFunSuite {
       * under `s1`, the restart under `s2`, then a third run after a byte of
       * each state delta file is flipped. Gives every batch's rows in order,
       * the checkpoint's files and their modes, and the third run's error
-      * condition. */
+      * conditions and whether a Hadoop `ChecksumException` caused it. */
     def run(s1: SparkSession, s2: SparkSession) = {
       val d = tmp("localfs_stream")
       val in = d.resolve("in"); Files.createDirectories(in)
@@ -184,8 +186,10 @@ class LocalFsSpec extends AnyFunSuite {
         Files.write(f, b)
       }
       val corrupt = Try(start(s2, "f3.txt", Seq("b"))).failed.toOption.map { e =>
-        Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
-          .mkString(" ").split("[^A-Z_]+").filter(_.contains("CHECKSUM")).toSet
+        val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+        (chain.map(_.getMessage).mkString(" ").split("[^A-Z_]+")
+          .filter(_.contains("CHECKSUM")).toSet,
+          chain.exists(_.isInstanceOf[ChecksumException]))
       }
       (batches.toSeq, modes, corrupt)
     }
@@ -196,8 +200,13 @@ class LocalFsSpec extends AnyFunSuite {
     // Hadoop's .crc sidecar and Spark's own checksum file beside a state file
     val names = stock._2.map(_._1).toSet
     assert(names("state/0/0/.1.delta.crc") && names("state/0/0/1.delta.crc"), names)
-    assert(stock._3.contains(Set("CHECKPOINT_FILE_CHECKSUM_VERIFICATION_FAILED")), stock._3)
-    assert(forkFree == stock)
+    assert(stock._3.contains((Set("CHECKPOINT_FILE_CHECKSUM_VERIFICATION_FAILED"), false)),
+      stock._3)
+    // fork-free, FileContext.open(path) verifies Hadoop's .crc sidecar, so
+    // the flipped byte fails the restart with a ChecksumException before
+    // Spark's own state-file check runs; everything else is identical
+    assert(forkFree._3.exists(_._2), forkFree._3)
+    assert(forkFree.copy(_3 = stock._3) == stock)
     // a checkpoint written fork-free restarts under stock Hadoop unchanged
     assert(run(spark, stockSession) == stock)
   }

@@ -86,46 +86,44 @@ class StreamingSoakSpec extends AnyFunSuite {
     // state-store GC the 3-day idle-retention analog relies on
     // (DwdTradeOrderDetail.java:26 — tableEnv idle-state retention;
     // here the watermark + bounded join conditions reclaim it). The
-    // numRowsTotal device is the EarlyFireSpec GC case's template.
-    implicit val ctx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
+    // numRowsTotal device is the EarlyFireSpec GC case's template. The
+    // RocksDB provider is set on a session of its own, so the shared
+    // test session's conf never changes under a concurrent query.
+    val session = spark.newSession()
+    session.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    implicit val ctx = session.sqlContext
+    val mem = MemoryStream[String]
+    val q = TradePipeline.orderDetailStream(
+        graft.sources.Sources.topicDb(mem.toDF().toDF("value")),
+        Soak.baseDic(session))
+      .writeStream.format("memory").queryName("trade_state_gc")
+      .outputMode("append").start()
+    def stateRows: Long = q.recentProgress
+      .filter(_.stateOperators.nonEmpty)
+      .maxBy(_.batchId).stateOperators.map(_.numRowsTotal).sum
     try {
-      val mem = MemoryStream[String]
-      val q = TradePipeline.orderDetailStream(
-          graft.sources.Sources.topicDb(mem.toDF().toDF("value")),
-          Soak.baseDic(spark))
-        .writeStream.format("memory").queryName("trade_state_gc")
-        .outputMode("append").start()
-      def stateRows: Long = q.recentProgress
-        .filter(_.stateOperators.nonEmpty)
-        .maxBy(_.batchId).stateOperators.map(_.numRowsTotal).sum
-      try {
-        mem.addData(Soak.dbPhase1: _*); q.processAllAvailable()
-        mem.addData(Soak.dbPhase2: _*); q.processAllAvailable()
-        val before = stateRows
-        // 3 details + 3 infos + 1 activity buffered across the three
-        // symmetric-hash joins (plus inner-join composites)
-        assert(before >= 8, s"expected buffered join state, got $before")
-        // two flush probes (unmatched order_info hours later): the first
-        // advances the watermark past every join window + retention, the
-        // second runs the batch in which eviction executes
-        mem.addData(Soak.dbFlush(Soak.T0 / 1000 + 7200): _*)
-        q.processAllAvailable()
-        mem.addData(Soak.dbFlush(Soak.T0 / 1000 + 7300): _*)
-        q.processAllAvailable()
-        val after = stateRows
-        assert(after < before,
-          s"join state not reclaimed by the watermark: $before -> $after")
-        // only the flush probes themselves may remain buffered
-        assert(after <= 6,
-          s"residual join state beyond the flush probes: $after rows")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+      mem.addData(Soak.dbPhase1: _*); q.processAllAvailable()
+      mem.addData(Soak.dbPhase2: _*); q.processAllAvailable()
+      val before = stateRows
+      // the order_detail ⋈ order_info join buffers 3 details (d1-d3) and
+      // 2 infos (o1, o2); the keyed-state operator buffers 2 keys: d1
+      // (its joined row + act9, waiting for a coupon) and d2 (its joined
+      // row). d3's order_info has not arrived.
+      assert(before == 7, s"expected buffered join state, got $before")
+      // two flush probes (unmatched order_info hours later): the first
+      // advances the watermark past every join window + retention, the
+      // second runs the batch in which eviction executes
+      mem.addData(Soak.dbFlush(Soak.T0 / 1000 + 7200): _*)
+      q.processAllAvailable()
+      mem.addData(Soak.dbFlush(Soak.T0 / 1000 + 7300): _*)
+      q.processAllAvailable()
+      val after = stateRows
+      assert(after < before,
+        s"join state not reclaimed by the watermark: $before -> $after")
+      // only the flush probes themselves may remain buffered
+      assert(after <= 2,
+        s"residual join state beyond the flush probes: $after rows")
+    } finally q.stop()
   }
 }
