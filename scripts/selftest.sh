@@ -249,5 +249,26 @@ expect 0 threadpeak_true scripts/threadpeak.sh true
 [ "$(peak_threads threadpeak_true true)" = 1 ] || {
   echo "[FAIL] threadpeak_true: want 1 thread"; FAIL=1; }
 
+# --- codegencount: a program that logs two CodeGenerator compile lines
+#     must read 2 compiles, and `true` must read 0 (the program runs on
+#     the jars of the Spark install named by SPARK_HOME)
+cat > "$T/Cg.java" <<'EOF'
+public class Cg {
+  public static void main(String[] a) {
+    var l = org.apache.logging.log4j.LogManager.getLogger(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator");
+    l.info("Code generated in 1.5 ms");
+    l.info("Code generated in 2.5 ms");
+  }
+}
+EOF
+expect 0 codegencount_two scripts/codegencount.sh \
+  java -cp "${SPARK_HOME:?}/jars/*" "$T/Cg.java"
+grep -qx "2 compiles" "$T/codegencount_two.log" || {
+  echo "[FAIL] codegencount_two: the two logged compiles were not counted"; FAIL=1; }
+expect 0 codegencount_none scripts/codegencount.sh true
+grep -qx "0 compiles" "$T/codegencount_none.log" || {
+  echo "[FAIL] codegencount_none: counted compiles that never ran"; FAIL=1; }
+
 echo "== selftest $([ $FAIL -eq 0 ] && echo OK || echo FAILED) =="
 exit $FAIL

@@ -11,8 +11,8 @@ import org.apache.spark.sql.SparkSession
   * backend is commented out at e.g. DimApp.java:30-33 — here it's on),
   * and shuffle sizing meant to be overridden per cluster via --conf.
   * `harness()` — the command-line mains and the test JVM.
-  * All three serve `file:` with the fork-free local file system
-  * (`withLocalFs`).
+  * All three apply the JVM-wide block (`jvmWide`): the fork-free local
+  * file system and compile-once code generation.
   */
 object GraftSession {
 
@@ -46,18 +46,26 @@ object GraftSession {
 
   /** The command-line mains' and the test JVM's session: `master`,
     * `partitions` shuffle partitions, UTC, nanos-as-long parquet, no UI,
-    * and the fork-free local file system. */
+    * and the JVM-wide block. */
   def harness(master: String, partitions: String): SparkSession.Builder =
-    withLocalFs(SparkSession.builder().master(master))
+    jvmWide(SparkSession.builder().master(master))
       .config("spark.sql.shuffle.partitions", partitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
+  /** The confs that take effect once per JVM, when its first session
+    * starts: the fork-free local file system (`withLocalFs`) and
+    * compile-once code generation (`withCodegenReuse`). `base()` and
+    * `harness()` both apply it, so every session the engine builds runs
+    * both. */
+  private def jvmWide(b: SparkSession.Builder): SparkSession.Builder =
+    withCodegenReuse(withLocalFs(b))
+
   /** Serves `file:` with Hadoop's own local file system minus its forks
     * (`ForkFreeLocalFileSystem` for the `FileSystem` API,
     * `ForkFreeLocalFs` for `FileContext`, which Spark's checkpoint file
-    * manager uses). `base()` and `harness()` both apply it.
+    * manager uses).
     *
     * Why: Spark's jars ship no `libhadoop`, so stock Hadoop starts an OS
     * process for every `setPermission` (`chmod`, once for each created
@@ -90,11 +98,41 @@ object GraftSession {
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[ForkFreeLocalFs].getName)
 
-  /** The engine's conf under `local()` and `production()`: the fork-free
-    * local file system (why, and what stays identical: `withLocalFs`),
-    * the SQL extensions, AQE, UTC, nanos-as-long parquet and zstd. */
+  /** Compiles each generated class once per JVM: session artifact
+    * isolation off, and room for 1,000 compiled classes instead of
+    * Spark's 100.
+    *
+    * Why: `CodeGenerator.compile` caches a class under the pair (thread
+    * context class loader, source code). Every streaming query start runs
+    * on `sparkSession.cloneSession()`, a session with a new UUID, and so
+    * does every `spark.newSession()`. With artifact isolation on (Spark
+    * 4's default) the executor builds one class loader per session UUID,
+    * so every drain of every warehouse layer recompiled all the
+    * executor-side classes it had compiled before, its sibling tasks
+    * waiting on the compile's lock. And one pipeline round's working set,
+    * about 300 (loader, code) pairs, outgrows a 100-entry LRU, so
+    * driver-side classes were evicted between drains as well; 1,000 leaves
+    * room over it. Neither setting alone is enough: a perfbench pipeline
+    * round (seed 1, 4-vCPU VM) compiled 508 classes in 7.9 s of Janino
+    * time before, 485 with isolation off only, 371 with the larger cache
+    * only, and 55 in 0.5 s with both: first compiles, and classes whose
+    * code embeds a per-batch watermark literal.
+    *
+    * What stays identical: plans, results, counts and the generated code;
+    * only whether a class is compiled again changes. A jar or class added
+    * with `addArtifact` would now be visible to every session, not only
+    * to the one that added it; the engine adds none.
+    * `spark.sql.codegen.cache.maxEntries` is a static conf, read when the
+    * JVM's first session starts. */
+  private def withCodegenReuse(b: SparkSession.Builder): SparkSession.Builder =
+    b.config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+
+  /** The engine's conf under `local()` and `production()`: the JVM-wide
+    * block (`jvmWide`), the SQL extensions, AQE, UTC, nanos-as-long
+    * parquet and zstd. */
   private def base(b: SparkSession.Builder): SparkSession.Builder =
-    withLocalFs(b).withExtensions(new graft.functions.GraftExtensions)
+    jvmWide(b).withExtensions(new graft.functions.GraftExtensions)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // TIMESTAMP(NANOS) parquet (events table) reads as long; Tables.events

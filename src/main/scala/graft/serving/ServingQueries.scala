@@ -23,6 +23,12 @@ object ServingQueries {
     if (df.columns.contains("dt")) df.filter(col("dt") === date)
     else df.filter(date_format(col("stt"), "yyyyMMdd").cast("int") === date)
 
+  /** `num / den` as a double, NULL where `den` is 0: under ANSI mode an
+    * unguarded division by a zero sum throws DIVIDE_BY_ZERO and fails the
+    * whole endpoint for one empty date or channel. */
+  private def ratio(num: Column, den: Column): Column =
+    when(den =!= 0, num.cast("double") / den)
+
   /** trade/stats (TradeStatsMapper.java:18-36): 4-way UNION ALL of KPI
     * rows over the trade order window. */
   def tradeStats(dwsTradeOrder: DataFrame, date: Int): DataFrame = {
@@ -52,8 +58,7 @@ object ServingQueries {
     // unguarded division became a DIVIDE_BY_ZERO task failure that
     // silently DROPPED q70 from the verify output — found by auditing
     // the gate denominator against the registered query count)
-    def per(c: String) = when(sum(col("sv_ct")) > 0,
-      sum(col(c)).cast("double") / sum(col("sv_ct"))).otherwise(lit(null))
+    def per(c: String) = ratio(sum(col(c)), sum(col("sv_ct")))
     onDate(dwsTrafficChannel, date)
       .groupBy(col("ch"))
       .agg(
@@ -113,7 +118,7 @@ object ServingQueries {
   def activityStats(dwsTradeOrder: DataFrame, date: Int): DataFrame =
     onDate(dwsTradeOrder, date)
       .groupBy(date_format(col("stt"), "yyyyMMdd").cast("int").as("dt"))
-      .agg((sum(col("order_activity_reduce_amount")).cast("double") /
+      .agg(ratio(sum(col("order_activity_reduce_amount")),
         sum(col("order_origin_total_amount"))).as("subsidy_rate"))
 
   /** user/userChangeCt (UserStatsMapper.java:41-53): 3-way union of user
@@ -133,7 +138,7 @@ object ServingQueries {
   def couponStats(dwsTradeOrder: DataFrame, date: Int): DataFrame =
     onDate(dwsTradeOrder, date)
       .agg(sum(col("order_coupon_reduce_amount")).as("coupon_reduce_amount"),
-        (sum(col("order_coupon_reduce_amount")).cast("double") /
+        ratio(sum(col("order_coupon_reduce_amount")),
           sum(col("order_origin_total_amount"))).as("coupon_subsidy_rate"))
 
   /** user/uvPerPage (UserStatsMapper.java:12-36): per-page UV stack —

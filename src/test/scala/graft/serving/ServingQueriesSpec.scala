@@ -80,6 +80,19 @@ class ServingQueriesSpec extends AnyFunSuite {
     assert(utc == Map("order" -> 7.0, "payment" -> 3.0))
   }
 
+  test("activityStats / couponStats give a NULL rate where the origin total sums to 0") {
+    val amounts = Seq("order_activity_reduce_amount", "order_coupon_reduce_amount",
+      "order_origin_total_amount")
+    val zero = winFrame(Seq(("2022-04-29 10:00:00", amounts.map(_ -> 0).toMap)))
+    val dec = amounts.foldLeft(zero)((df, c) => df.withColumn(c, col(c).cast("decimal(16,2)")))
+    for (trade <- Seq(zero, dec)) {
+      val a = ServingQueries.activityStats(trade, D).head()
+      assert(a.getAs[Int]("dt") == D && a.isNullAt(a.fieldIndex("subsidy_rate")))
+      val c = ServingQueries.couponStats(trade, D).head()
+      assert(c.isNullAt(c.fieldIndex("coupon_subsidy_rate")))
+    }
+  }
+
   test("date filter excludes other days") {
     val base = winFrame(Seq(
       ("2022-04-29 10:00:00", Map[String, Any]("uv_ct" -> 1, "pv_ct" -> 1, "sv_ct" -> 1)),
