@@ -4,26 +4,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.queries.Mat.StableOps
 
-/** Advanced composite operators: connected-components dedup clustering
-  * (the decision step after candidate generation) and a sequential
-  * conversion funnel.
+/** Advanced composite operators: near-dup dedup clustering (the
+  * decision step after candidate generation, its connected components
+  * solved by [[Components.of]]) and a sequential conversion funnel.
   */
 object Advanced {
 
-  /** Edge-count cutoff below which components are solved with union-find
-    * on the driver: after LSH/shingle candidate generation the dup graph
-    * is a vanishing fraction of the corpus, and a bounded collect beats
-    * O(diameter) distributed rounds — the same small-side reasoning as a
-    * broadcast join. Above the cutoff, the distributed loop runs. */
-  private val DriverEdgeCutoff = 100000
-
   /** Near-dup clustering: q31's candidate pairs → connected components →
-    * one representative (min doc_id) per cluster. Spark side is iterative
-    * min-label propagation over the edge list — the standard distributed
-    * connected-components loop (one shuffle on doc_id per round,
-    * localCheckpoint between rounds to cut lineage). The oracle is a
-    * recursive CTE computing the same minimum reachable id — proving the
-    * loop equivalent to transitive closure. */
+    * one representative (min doc_id) per cluster, through
+    * [[Components.of]] (driver union-find at or below its edge cutoff,
+    * the large-star/small-star loop above it). The oracle is a recursive
+    * CTE computing the same minimum reachable id — proving the
+    * components equivalent to transitive closure. */
   def dedupClusters(s: SparkSession, d: String): DataFrame =
     dedupClusters(s, d, Int.MaxValue)
 
@@ -35,94 +27,7 @@ object Advanced {
     * only the candidate edge set is (deliberately) thinner. */
   def dedupClusters(s: SparkSession, d: String, dfCap: Int): DataFrame = {
     val pairs = TextOps.ngramJaccard(s, d, dfCap).select(col("doc_a"), col("doc_b"))
-    componentsFromPairs(s, pairs)
-  }
-
-  /** Connected components over an undirected candidate-pair edge list →
-    * (doc_id, cluster_rep, is_kept) with the min-id representative.
-    * Shared by the shingle-verified chain (q57) and the MinHash-LSH
-    * chain (q110). */
-  private[queries] def componentsFromPairs(s: SparkSession, pairs: DataFrame)
-      : DataFrame = {
-    // symmetrize via explode, NOT union(pairs, pairs.swap): a union
-    // evaluates the (expensive) candidate-generation subtree once per
-    // leg; the explode emits both directions from a single pass
-    val edges = pairs
-      .select(explode(array(
-        struct(col("doc_a"), col("doc_b")),
-        struct(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))).as("e"))
-      .select(col("e.doc_a").as("doc_a"), col("e.doc_b").as("doc_b"))
-      .distinct()
-      // candidate-edge frames are bucket-bounded by construction (df
-      // caps upstream); caching them at the raw shuffle width makes the
-      // count + every cached read schedule shuffle.partitions tasks
-      // (4096 under the production profile — measured r10). Coalescing
-      // to the core count first never increases width; it does narrow
-      // the producing distinct stage to core count too, which the
-      // bucket-bounded precondition makes safe — above the cutoff the
-      // large-star rounds re-shuffle at full width anyway.
-      .coalesce(pairs.sparkSession.sparkContext.defaultParallelism)
-      .cache()
-    val edgeCount = edges.count()
-    if (edgeCount <= DriverEdgeCutoff) {
-      import s.implicits._
-      val es = edges.as[(Long, Long)].collect()
-      edges.unpersist()
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val rows = es.map(_._1).distinct.map(n => (n, find(n))).toSeq
-      return rows.toDF("doc_id", "cluster_rep")
-        .select(col("doc_id"), col("cluster_rep"),
-          (col("doc_id") === col("cluster_rep")).as("is_kept"))
-    }
-    val nodes = edges.select(col("doc_a").as("doc_id")).distinct()
-    // checkpoint (Mat.stable: localCheckpoint, or a reliable
-    // checkpoint under spark.graft.reliableCheckpoint — executor-loss
-    // survivable) each round: iterative DataFrame loops otherwise
-    // grow the logical plan exponentially (each iteration embeds the
-    // previous plan twice) — lineage truncation is what makes the loop
-    // O(iterations), and on a cluster it also bounds recovery cost.
-    var labels = nodes.withColumn("label", col("doc_id")).stable()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < 50) {
-      val neighborMin = edges
-        .join(labels, edges("doc_b") === labels("doc_id"))
-        .groupBy(edges("doc_a").as("doc_id"))
-        .agg(min(col("label")).as("nbr_label"))
-      // change flag computed IN the update projection, and the
-      // convergence witness observed INSIDE the checkpoint job
-      // (Mat.stableObserved) — ONE action per iteration instead of the
-      // checkpoint + a separate isEmpty scan (r16, guide §1.2)
-      val (updated, obs) = Mat.stableObserved(
-        labels.alias("l")
-          .join(neighborMin.alias("n"), Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            least(col("l.label"),
-              coalesce(col("n.nbr_label"), col("l.label"))).as("label"),
-            (coalesce(col("n.nbr_label"), col("l.label")) < col("l.label"))
-              .as("changed")),
-        Seq(count(when(col("changed"), lit(1))).as("n_changed")))
-      converged = obs.map(_.getLong(0) == 0L)
-        .getOrElse(updated.filter(col("changed")).isEmpty)
-      labels = updated.drop("changed")
-      iter += 1
-    }
-    edges.unpersist()
-    if (!converged)
-      throw new IllegalStateException(
-        s"connected components did not converge in $iter rounds — component " +
-          "diameter exceeds the cap; raise the cap or switch to " +
-          "path-doubling propagation")
-    labels.select(col("doc_id"), col("label").as("cluster_rep"),
-      (col("doc_id") === col("label")).as("is_kept"))
+    Components.of(s, pairs)
   }
 
   /** Full-corpus MinHash-LSH dedup chain — the 100 TB flagship shape.
@@ -143,7 +48,7 @@ object Advanced {
     *
     * Every candidate edge (both levels) is then verified by exact
     * token-set Jaccard — inter·100 ≥ union·jaccThresholdPct in pure
-    * integer arithmetic — and [[componentsFromPairs]] picks min-id
+    * integer arithmetic — and [[Components.of]] picks min-id
     * cluster representatives. Connectivity is the transitive closure of
     * VERIFIED star+rep edges (documented approximation: two docs whose
     * family reps fail pairwise verification are not linked even if the
@@ -201,7 +106,7 @@ object Advanced {
       .filter(col("inter_size") * 100 >=
         (col("n_a") + col("n_b") - col("inter_size")) * jaccThresholdPct)
       .select(col("doc_a"), col("doc_b"))
-    componentsFromPairs(s, verified)
+    Components.of(s, verified)
   }
 
   /** q151: near-dup cluster representative selection by QUALITY — the

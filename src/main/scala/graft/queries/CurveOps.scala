@@ -58,7 +58,7 @@ object CurveOps {
     val frames = ThreshMilli.map { t => Future {
       val edges = pairs.filter(
         col("inter_size") * 1000 >= col("union_size") * t)
-      val cc = GraphOps.largeSmallStar(s,
+      val cc = Components.star(s,
         edges.select(col("doc_a"), col("doc_b")))
       edges.agg(count(lit(1)).as("n_edges")).crossJoin(
           cc.agg(count(lit(1)).as("n_docs"),

@@ -63,7 +63,7 @@ object DensityOps {
         explode(nbrExpr).as("doc_b"))
       .join(core.select(col("id").as("doc_b")), "doc_b")
       .filter(col("doc_a") < col("doc_b"))
-    val cc = GraphOps.largeSmallStar(s, edges)
+    val cc = Components.star(s, edges)
       .select(col("doc_id").as("id"), col("cluster_rep"))
     val comp = core.join(cc, Seq("id"), "left")
       .select(col("gx"), col("gy"), col("n"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.Skew
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,7 +17,7 @@ import org.apache.spark.sql.functions._
   *   3. CLUSTER: transitive closure per block — edges never span
   *      blocks (the match is an equi-join on the block key), so the
   *      closure is a single distributed pass of block-local union-find
-  *      ([[blockClosure]]) rather than a global fixpoint loop;
+  *      ([[Components.blockLocal]]) rather than a global fixpoint loop;
   *      singletons kept as their own entity.
   *
   * Output: one row per resolved entity (canonical rep = lexicographic
@@ -40,50 +41,16 @@ object EntityResolutionOps {
 
   private val EditK = 2
 
-  /** Names per sub-block before the blocked self-join splits a block.
-    * sf-corpus blocks (~100 names) stay whole (kb = 1, pair set and
-    * plan unchanged); an adversarial hot block of B names splits into
-    * kb = ⌈B/256⌉ salt cells so its B²/2 pair enumeration spreads over
-    * kb partitions instead of serializing in one task (guide §2.5). */
-  private val SubBlockTarget = 256
-
-  /** Salted sides for a blocked vocabulary self-join (guide §2.5).
-    *
-    * One window count per block sizes kb = ⌈|block|/SubBlockTarget⌉;
-    * the probe side takes a deterministic salt in [0, kb) from the
-    * name's hash (never rand() — re-run tasks must re-derive the same
-    * cell, SPARK-38388), the build side is replicated to every salt, so
-    * each pair meets in EXACTLY the probe name's cell. Both sides are
-    * explicitly repartitioned on (blk, salt) at core-count width:
-    * user-specified counts are exempt from AQE's byte-based coalescing,
-    * which otherwise collapses this CPU-quadratic, byte-tiny match
-    * stage to one task (measured r15: 740k banded-DP calls single-task
-    * behind a sub-MB exchange); (blk, salt)-keyed so the join reuses
-    * the pin AND a hot block's cells land on kb different tasks. */
-  private[queries] def saltedSides(s: SparkSession, withBlk: DataFrame)
-      : (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val p = s.sparkContext.defaultParallelism
-    val sized = withBlk.withColumn("kb",
-      ceil(count(lit(1)).over(Window.partitionBy(col("blk")))
-        / lit(SubBlockTarget)).cast("int"))
-    val probe = sized
-      .withColumn("salt",
-        pmod(xxhash64(col("c_name")), col("kb")).cast("int"))
-      .repartition(p, col("blk"), col("salt"))
-    val build = sized
-      .withColumn("salt", explode(sequence(lit(0), col("kb") - lit(1))))
-      .repartition(p, col("blk"), col("salt"))
-    (probe, build)
-  }
-
   /** Block + match over a one-column (`c_name`) frame of entity names. */
   private[queries] def nameEdges(s: SparkSession, raw: DataFrame)
       : DataFrame = {
     graft.functions.EditDistOps.register(s)
     val names = raw.select(col("c_name")).distinct()
       .select(col("c_name"), substring(col("c_name"), 1, 16).as("blk"))
-    val (pa, pb) = saltedSides(s, names)
+    // salted sub-blocking + CPU-parallelism pin (Skew.blockSaltedSides)
+    val sized = names.withColumn("kb", Skew.blockCells(col("blk")))
+    val (pa, pb) =
+      Skew.blockSaltedSides(sized, sized, Seq("blk"), col("c_name"))
     pa.as("a").join(pb.as("b"),
         col("a.blk") === col("b.blk") && col("a.salt") === col("b.salt") &&
         col("a.c_name") < col("b.c_name"))
@@ -92,60 +59,13 @@ object EntityResolutionOps {
       .select(col("a.c_name").as("doc_a"), col("b.c_name").as("doc_b"))
   }
 
-  /** Connected components of the [[nameEdges]] match graph.
-    *
-    * Every edge joins two names in the SAME prefix-16 block — the match
-    * is an equi-join on `blk` — so components can NEVER span blocks,
-    * and the closure decomposes into independent per-block closures: a
-    * single groupBy(blk) pass with a local union-find over each block's
-    * edge list, instead of the O(log n)-round global star closure whose
-    * per-round fixed costs (checkpoint job + convergence action +
-    * driver planning, ~25 sequential sub-second jobs here) dominated
-    * q251/q269 at every scale where blocks are bounded (r16; guide
-    * §1.2 — the distributed algorithm before per-task work; measured
-    * via graft.Profile: the loop's rounds were latency, not data).
-    *
-    * Scale (100 TB): the per-task state is one block's MATCH EDGES —
-    * bounded by the same prefix-blocking contract that already bounds
-    * the B²/2 match stage (the q226 rule: size the prefix to the key
-    * density), and the groupBy reuses the match stage's existing
-    * block-keyed partitioning (no extra exchange). The star closure
-    * stays the right device for graphs whose edges CROSS partition
-    * keys (q159/q287/q295 use it unchanged); using it here priced a
-    * block-local problem at global-fixpoint cost. */
-  private[queries] def blockClosure(edges: DataFrame): DataFrame = {
-    val comps = udf((es: Seq[org.apache.spark.sql.Row]) => {
-      // union-find, smaller root wins ⇒ each root is its component's
-      // lexicographic minimum (the q159 cluster_rep contract)
-      val parent = scala.collection.mutable.HashMap.empty[String, String]
-      def find(x: String): String = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      es.foreach { e =>
-        val a = e.getString(0); val b = e.getString(1)
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      parent.keysIterator.toArray.sorted.map(k => (k, find(k)))
-    })
-    edges
-      .groupBy(substring(col("doc_a"), 1, 16).as("blk"))
-      .agg(collect_list(struct(col("doc_a"), col("doc_b"))).as("es"))
-      .select(explode(comps(col("es"))).as("kv"))
-      .select(col("kv._1").as("doc_id"), col("kv._2").as("cluster_rep"))
-  }
-
   /** Per-name entity labels over any one-column name frame. */
   private[queries] def labels(s: SparkSession, raw: DataFrame)
       : DataFrame = {
-    val cc = blockClosure(nameEdges(s, raw))
+    // every edge joins two names of one prefix-16 block (the match is
+    // an equi-join on blk), so its components never cross blocks
+    val cc = Components.blockLocal(nameEdges(s, raw),
+      substring(col("doc_a"), 1, 16))
     val all = raw.select(col("c_name").as("doc_id")).distinct()
     all.join(cc.select(col("doc_id"), col("cluster_rep")),
         Seq("doc_id"), "left")
@@ -223,7 +143,9 @@ object EntityResolutionOps {
       .select(col("c_name"), substring(col("c_name"), 1, 16).as("blk"),
         col("nat"), col("seg"), col("bal"))
     // same salted sub-blocking + CPU-parallelism pin as nameEdges
-    val (ca, cb) = saltedSides(s, attrs)
+    val sized = attrs.withColumn("kb", Skew.blockCells(col("blk")))
+    val (ca, cb) =
+      Skew.blockSaltedSides(sized, sized, Seq("blk"), col("c_name"))
     val cand = ca.as("a").join(cb.as("b"),
         col("a.blk") === col("b.blk") && col("a.salt") === col("b.salt") &&
         col("a.c_name") < col("b.c_name"))

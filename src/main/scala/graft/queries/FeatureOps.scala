@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.Skew
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -71,9 +72,11 @@ object FeatureOps {
     val names = Tables.customer(s, d).select(col("c_name")).distinct()
       .select(col("c_name"), substring(col("c_name"), 1, 16).as("blk"))
     // same salted sub-blocking + CPU-parallelism pin as the ER match
-    // (EntityResolutionOps.saltedSides): unpinned, AQE coalesced this
+    // (Skew.blockSaltedSides): unpinned, AQE coalesced this
     // CPU-quadratic byte-tiny match to ONE 1.15 s task (Profile, r16)
-    val (pa, pb) = EntityResolutionOps.saltedSides(s, names)
+    val sized = names.withColumn("kb", Skew.blockCells(col("blk")))
+    val (pa, pb) =
+      Skew.blockSaltedSides(sized, sized, Seq("blk"), col("c_name"))
     pa.as("a").join(pb.as("b"),
         col("a.blk") === col("b.blk") && col("a.salt") === col("b.salt") &&
           col("a.c_name") < col("b.c_name"))

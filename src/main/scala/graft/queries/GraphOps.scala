@@ -5,34 +5,18 @@ import graft.queries.Mat.StableOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Distributed connected components via alternating large-star /
-  * small-star (Kiveris et al., "Connected Components in MapReduce and
-  * Beyond", SoCC 2014) — the O(log n)-round algorithm for the dedup
-  * cluster step.
+/** Graph queries over the q57 candidate graph: component labels and
+  * sizes, per-node statistics, PageRank, BFS hops, degree
+  * assortativity and k-cores.
   *
-  * [[Advanced.componentsFromPairs]] runs min-label propagation, which
-  * is O(component diameter) rounds — fine for near-dup clusters
-  * (diameter is small) but the wrong asymptotic for the general case
-  * (a path-shaped component of length L needs L rounds). Large-star /
-  * small-star contracts components in O(log n) rounds regardless of
-  * diameter, each round two shuffle-aggregate-join passes over the
-  * edge list — the shape that holds when the candidate graph itself
-  * is billions of edges.
-  *
-  *  - large-star(u): connect every STRICTLY LARGER neighbor of u to
-  *    m(u) = min(Γ(u) ∪ {u}).
-  *  - small-star(u): connect every neighbor ≤ u, and u itself, to
-  *    m(u).
-  *
-  * Both preserve connectivity; alternated to fixpoint the edge set
-  * becomes a star forest rooted at each component's minimum id.
-  *
-  * q159 runs it over the same shingle-verified candidate pairs as q57
-  * and emits the identical (doc_id, cluster_rep, is_kept) contract —
-  * the oracle is the same transitive-closure recursive CTE, so the
-  * hash match proves the star algorithm ≡ transitive closure on this
-  * graph while exercising a genuinely different distributed plan than
-  * q57's propagation loop.
+  * q159 clusters the same shingle-verified candidate pairs as q57 with
+  * [[Components.star]] (large-star/small-star, O(log n) rounds) and
+  * emits the identical (doc_id, cluster_rep, is_kept) contract — the
+  * oracle is the same transitive-closure recursive CTE, so the hash
+  * match proves the star algorithm ≡ transitive closure on this graph
+  * while exercising a different distributed plan than q57, whose
+  * [[Components.of]] solves the sf corpora's small graphs on the
+  * driver.
   *
   * Ref: the reference keys its dedup decisions per id with ValueState
   * (DwdTrafficUniqueVisitorDetail.java:60-109); clustering candidate
@@ -40,105 +24,10 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  private val MaxRounds = 30
-
-  /** Alternating large-star/small-star to fixpoint over an undirected
-    * edge list (any orientation, self-loops ignored) →
-    * (doc_id, cluster_rep, is_kept) for every node with ≥1 edge. */
-  private[queries] def largeSmallStar(s: SparkSession, pairs: DataFrame)
-      : DataFrame = {
-    // normalized undirected form (u < v); the loop maintains this
-    // invariant — large-star emits (m, w) with m ≤ u < w, small-star
-    // emits (m, w) with m ≤ w, self-loops dropped
-    // cardinality measured INSIDE the checkpoint job via observe — the
-    // separate count() action per materialization was one whole job of
-    // scheduling latency each (r16)
-    var (edges, n) = Mat.stableCount(pairs
-      .select(least(col("doc_a"), col("doc_b")).as("u"),
-        greatest(col("doc_a"), col("doc_b")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct())
-    // nodes reads the INITIAL checkpointed edge frame and is consumed
-    // exactly once (the final left join), so it needs no checkpoint of
-    // its own — the eager stable() here was one wasted job per closure
-    // call (and q295 calls the closure three times) (r15)
-    val nodes = edges.select(explode(array(col("u"), col("v"))).as("doc_id"))
-      .distinct()
-
-    // directed both ways: one row per (node, neighbor)
-    def directed(e: DataFrame): DataFrame = e
-      .select(explode(array(
-        struct(col("u").as("x"), col("v").as("nbr")),
-        struct(col("v").as("x"), col("u").as("nbr")))).as("e"))
-      .select(col("e.x").as("x"), col("e.nbr").as("nbr"))
-
-    // m(x) = min(Γ(x) ∪ {x})
-    def mins(dir: DataFrame): DataFrame = dir
-      .groupBy(col("x"))
-      .agg(least(col("x"), min(col("nbr"))).as("m"))
-
-    var converged = false
-    var round = 0
-    // fixpoint bookkeeping (r15): carry the previous round's cardinality
-    // instead of re-counting the already-checkpointed frame every round
-    // (one action saved per round), and test set equality with a single
-    // LEFT ANTI join — both frames are distinct by construction, so
-    // "same cardinality ∧ empty one-sided anti" ⇔ equal sets, without
-    // EXCEPT's extra de-dup aggregate. Short-circuit keeps the anti-join
-    // off every non-final round (cardinality still shrinking).
-    while (!converged && round < MaxRounds) {
-      // afterLarge is NOT checkpointed (r15): its three same-round
-      // consumers (dirS's join probe + the two mins(dirS) legs) all read
-      // it through the SAME dirS-by-x exchange, which Spark
-      // de-duplicates via ReusedExchange inside the one afterSmall job —
-      // the eager materialization here was a whole extra job per round.
-      // Lineage still truncates every round at afterSmall's checkpoint,
-      // so plan depth stays O(1) per round, not compounding.
-      // afterLarge is NOT distinct'd either (r16): each directed edge
-      // (x, w > x) emits exactly one row, so the frame is never larger
-      // than the round's edge set; min-aggregates are duplicate-
-      // insensitive and the round's final distinct dedups the output —
-      // the intermediate distinct was one whole exchange+aggregate (an
-      // AQE stage job) per round for nothing (guide §2.4).
-      val dirL = directed(edges)
-      val afterLarge = dirL.join(mins(dirL), Seq("x"))
-        .filter(col("nbr") > col("x"))
-        .select(col("m").as("u"), col("nbr").as("v"))
-        .filter(col("u") =!= col("v"))
-      val dirS = directed(afterLarge)
-      val (afterSmall, m) = Mat.stableCount(
-        dirS.join(mins(dirS), Seq("x"))
-          .filter(col("nbr") <= col("x"))
-          .select(col("m").as("u"), col("nbr").as("v"))
-          .unionByName(mins(dirS)
-            .select(col("m").as("u"), col("x").as("v")))
-          .filter(col("u") =!= col("v"))
-          .distinct())
-      converged = m == n &&
-        afterSmall.join(edges, Seq("u", "v"), "left_anti").isEmpty
-      edges = afterSmall
-      n = m
-      round += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"large-star/small-star did not converge in $round rounds")
-    // star forest: every non-root has exactly the component min as its
-    // neighbor set's minimum; roots keep themselves
-    val labels = directed(edges)
-      .groupBy(col("x").as("doc_id"))
-      .agg(least(col("doc_id"), min(col("nbr"))).as("cluster_rep"))
-    nodes.join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("cluster_rep"), col("doc_id")).as("cluster_rep"))
-      .select(col("doc_id"), col("cluster_rep"),
-        (col("doc_id") === col("cluster_rep")).as("is_kept"))
-  }
-
-  /** q159: q57's verified candidate pairs clustered by the star
-    * algorithm — output contract and oracle identical to q57. */
+  /** q159: q57's verified candidate pairs clustered by
+    * [[Components.star]] — output contract and oracle identical to q57. */
   def ccLargeStar(s: SparkSession, d: String): DataFrame =
-    largeSmallStar(s,
+    Components.star(s,
       TextOps.ngramJaccard(s, d).select(col("doc_a"), col("doc_b")))
 
   /** q174: per-node graph statistics over the q57 candidate graph —

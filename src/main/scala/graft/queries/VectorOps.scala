@@ -4,6 +4,7 @@ import graft.queries.Mat.StableOps
 
 import graft.Tables
 import graft.functions.VecOps.{vec_cosine, vec_dot, vec_norm}
+import graft.operators.Skew
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,12 +47,6 @@ object VectorOps {
   private val NPlanes = 8
   private val Dims = 64
   private val Planes = planeCoeffs(NPlanes, Dims)
-
-  /** Vectors per LSH-bucket salt cell before the banded self-join
-    * splits a bucket (the EntityResolutionOps.SubBlockTarget device,
-    * guide §2.5): caps the per-task vec_dot pair work under hot-bucket
-    * skew and pins the match stage at core-count width. */
-  private val SaltTarget = 256
 
   /** Per-cluster stats: count + min/max L2 norm (order-free aggregates of
     * bit-exact per-row norms). */
@@ -132,35 +127,26 @@ object VectorOps {
     }
     // materialize once: the banded frame (8 hyperplane dots + an L2
     // normalize per vector) otherwise re-evaluates on both join legs.
-    // kb sizes the per-bucket salt split in the same pass (the ER
-    // SubBlockTarget device, guide §2.5): the banded self-join is
-    // CPU-quadratic (one 64-dim vec_dot per candidate pair) behind a
-    // byte-tiny exchange, which AQE otherwise coalesces to ONE task
-    // (measured r16: 0.82 s single-task stage carrying every dot).
+    // kb sizes the per-bucket salt split in the same pass
+    // (Skew.blockCells): the banded self-join is CPU-quadratic (one
+    // 64-dim vec_dot per candidate pair) behind a byte-tiny exchange,
+    // which AQE otherwise coalesces to ONE task (measured r16: 0.82 s
+    // single-task stage carrying every dot).
     val banded = base
       .select(col("vec_id"), col("ne"), explode(array(bandCols: _*)).as("bb"))
       .select(col("vec_id"), col("ne"),
         col("bb.band").as("band"), col("bb.bval").as("bval"))
-      .withColumn("kb", ceil(
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("bval"))) / lit(SaltTarget))
-        .cast("int"))
+      .withColumn("kb", Skew.blockCells(col("band"), col("bval")))
       .stable()
-    // probe takes a deterministic salt cell from its vec_id (never
-    // rand(): re-run tasks must re-derive the same cell, SPARK-38388);
-    // build is replicated to every cell, so each pair meets exactly in
-    // the SMALLER vec_id's cell (the vec_a < vec_b filter below). Both
-    // sides pinned at core-count width on the salted key — explicit
-    // repartition counts are exempt from AQE byte-based coalescing.
-    val p = s.sparkContext.defaultParallelism
-    val a = banded.select(col("band"), col("bval"),
-      col("vec_id").as("vec_a"), col("ne").as("na"),
-      pmod(xxhash64(col("vec_id")), col("kb")).cast("int").as("salt"))
-      .repartition(p, col("band"), col("bval"), col("salt"))
-    val b = banded.select(col("band"), col("bval"),
-      col("vec_id").as("vec_b"), col("ne").as("nb"),
-      explode(sequence(lit(0), col("kb") - lit(1))).as("salt"))
-      .repartition(p, col("band"), col("bval"), col("salt"))
+    // probe salts by its vec_id; build is replicated to every cell, so
+    // each pair meets exactly in the SMALLER vec_id's cell (the
+    // vec_a < vec_b filter below)
+    val (a, b) = Skew.blockSaltedSides(
+      banded.select(col("band"), col("bval"), col("vec_id").as("vec_a"),
+        col("ne").as("na"), col("kb")),
+      banded.select(col("band"), col("bval"), col("vec_id").as("vec_b"),
+        col("ne").as("nb"), col("kb")),
+      Seq("band", "bval"), col("vec_a"))
     a.join(b, Seq("band", "bval", "salt"))
       .filter(col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"),
@@ -175,13 +161,13 @@ object VectorOps {
     * shingle (q57) and MinHash (q110) chains: banded-LSH candidate
     * pairs at the q35 threshold → connected components → keep one
     * representative per cluster, reported per label. Reuses
-    * [[Advanced.componentsFromPairs]] (driver union-find under the
-    * edge cutoff, distributed min-label propagation above it), so the
-    * scale posture is the same as the text chains'. */
+    * [[Components.of]] (driver union-find at or below its edge cutoff,
+    * the large-star/small-star loop above it), so the scale posture is
+    * the same as the text chains'. */
   def embeddingDedup(s: SparkSession, d: String): DataFrame = {
     val pairs = cosinePairs(s, d, 0.45)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-    val drops = Advanced.componentsFromPairs(s, pairs)
+    val drops = Components.of(s, pairs)
       .filter(!col("is_kept"))
       .select(col("doc_id").as("vec_id"), lit(true).as("dropped"))
     Tables.embeddings(s, d)

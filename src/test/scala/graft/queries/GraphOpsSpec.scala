@@ -3,18 +3,18 @@ package graft.queries
 import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-/** q159 contracts: the large-star/small-star fixpoint labels known
-  * topologies correctly (including high-diameter paths, the case that
-  * separates it from bounded-round propagation), and agrees with the
-  * independent union-find/propagation implementation on a seeded
-  * pseudo-random graph.
+/** q159 contracts: the large-star/small-star fixpoint
+  * ([[Components.star]]) labels known topologies correctly (including
+  * high-diameter paths, the case that separates it from bounded-round
+  * propagation), and agrees with an independent union-find on
+  * adversarial and seeded pseudo-random graphs.
   */
 class GraphOpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def labels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
-    GraphOps.largeSmallStar(spark, edges.toDF("doc_a", "doc_b"))
+    Components.star(spark, edges.toDF("doc_a", "doc_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
