@@ -270,5 +270,16 @@ expect 0 codegencount_none scripts/codegencount.sh true
 grep -qx "0 compiles" "$T/codegencount_none.log" || {
   echo "[FAIL] codegencount_none: counted compiles that never ran"; FAIL=1; }
 
+# --- session_recipe: query code must not register a function or an
+#     optimizer rule on its session (GraftExtensions installs both at
+#     session build); the tree must read green, and a copy with one
+#     registration injected must read red
+recipe_clean() { [ -d "$1" ] && ! grep -rnE \
+  '\.register\(|extraOptimizations|createOrReplaceTempFunction' "$1"; }
+expect 0 session_recipe recipe_clean src/main/scala/graft/queries
+cp -r src/main/scala/graft/queries "$T/recipe_queries"
+echo '    graft.functions.GramOps.register(s)' >> "$T/recipe_queries/BandOps.scala"
+expect 1 session_recipe_injected recipe_clean "$T/recipe_queries"
+
 echo "== selftest $([ $FAIL -eq 0 ] && echo OK || echo FAILED) =="
 exit $FAIL

@@ -145,7 +145,6 @@ object ClusterGate {
 
   private def buildSession(master: String): SparkSession = {
     val b0 = GraftSession.harness(master, "8").appName(s"graft-clustergate-$master")
-      .withExtensions(new graft.functions.GraftExtensions)
     // production last, so its 4096 shuffle width overrides the 8
     val b = if (prodProfile) GraftSession.withProductionConfs(b0) else b0
     val withCluster = if (master.startsWith("local-cluster")) {

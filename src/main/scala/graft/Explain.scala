@@ -13,8 +13,7 @@ object Explain {
     val pat = if (args.length > 1) args(1) else ""
     val runFirst = !(args.length > 2 && args(2) == "initial")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.harness(s"local[$cpus]", cpus)
-      .withExtensions(new graft.functions.GraftExtensions).getOrCreate()
+    val spark = GraftSession.harness(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(_._1.contains(pat))

@@ -11,8 +11,13 @@ import org.apache.spark.sql.SparkSession
   * backend is commented out at e.g. DimApp.java:30-33 — here it's on),
   * and shuffle sizing meant to be overridden per cluster via --conf.
   * `harness()` — the command-line mains and the test JVM.
-  * All three apply the JVM-wide block (`jvmWide`): the fork-free local
-  * file system and compile-once code generation.
+  * All three apply one shared block (`recipe`): the engine's SQL
+  * extensions (`GraftExtensions`: the native functions and the band-join
+  * rule), the fork-free local file system and compile-once code
+  * generation. A session built any other way needs
+  * `spark.sql.extensions=graft.functions.GraftExtensions`; without it a
+  * query that calls a native function fails at analysis with
+  * `UNRESOLVED_ROUTINE`, naming the function.
   */
 object GraftSession {
 
@@ -46,21 +51,24 @@ object GraftSession {
 
   /** The command-line mains' and the test JVM's session: `master`,
     * `partitions` shuffle partitions, UTC, nanos-as-long parquet, no UI,
-    * and the JVM-wide block. */
+    * and the shared block (`recipe`). */
   def harness(master: String, partitions: String): SparkSession.Builder =
-    jvmWide(SparkSession.builder().master(master))
+    recipe(SparkSession.builder().master(master))
       .config("spark.sql.shuffle.partitions", partitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
-  /** The confs that take effect once per JVM, when its first session
-    * starts: the fork-free local file system (`withLocalFs`) and
-    * compile-once code generation (`withCodegenReuse`). `base()` and
-    * `harness()` both apply it, so every session the engine builds runs
-    * both. */
-  private def jvmWide(b: SparkSession.Builder): SparkSession.Builder =
+  /** What every session the engine builds shares; `base()` and
+    * `harness()` both apply it. The SQL extensions install the native
+    * functions and the band-join rule once, at session build (and on
+    * every `newSession()` of the session), so no query registers either.
+    * The confs take effect once per JVM, when its first session starts:
+    * the fork-free local file system (`withLocalFs`) and compile-once
+    * code generation (`withCodegenReuse`). */
+  private def recipe(b: SparkSession.Builder): SparkSession.Builder =
     withCodegenReuse(withLocalFs(b))
+      .withExtensions(new graft.functions.GraftExtensions)
 
   /** Serves `file:` with Hadoop's own local file system minus its forks
     * (`ForkFreeLocalFileSystem` for the `FileSystem` API,
@@ -128,11 +136,10 @@ object GraftSession {
     b.config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "1000")
 
-  /** The engine's conf under `local()` and `production()`: the JVM-wide
-    * block (`jvmWide`), the SQL extensions, AQE, UTC, nanos-as-long
-    * parquet and zstd. */
+  /** The engine's conf under `local()` and `production()`: the shared
+    * block (`recipe`), AQE, UTC, nanos-as-long parquet and zstd. */
   private def base(b: SparkSession.Builder): SparkSession.Builder =
-    jvmWide(b).withExtensions(new graft.functions.GraftExtensions)
+    recipe(b)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // TIMESTAMP(NANOS) parquet (events table) reads as long; Tables.events

@@ -17,8 +17,7 @@ object Profile {
     val pat = args(1)
     val runs = if (args.length > 2) args(2).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.harness(s"local[$cpus]", cpus)
-      .withExtensions(new graft.functions.GraftExtensions).getOrCreate()
+    val spark = GraftSession.harness(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     case class J(id: Int, var start: Long = 0L, var end: Long = 0L,
       var site: String = "", var stages: Int = 0, var tasks: Int = 0,

@@ -17,7 +17,6 @@ object Verify {
     // over the local master — the partition-count-invariance run.
     val prod = sys.env.get("SPARK_GRAFT_PROFILE").contains("production")
     val builder0 = GraftSession.harness(s"local[$cpus]", cpus)
-      .withExtensions(new graft.functions.GraftExtensions)
     val spark =
       (if (prod) GraftSession.withProductionConfs(builder0) else builder0)
         .getOrCreate()

@@ -183,7 +183,6 @@ object CorpusSoak {
       if (prod) "4096" else "8")
     val b0 = graft.GraftSession.harness("local[8]", parts)
       .appName("graft-corpus-soak")
-      .withExtensions(new graft.functions.GraftExtensions)
     val b = if (prod) graft.GraftSession.withProductionConfs(b0) else b0
     b.config("spark.sql.shuffle.partitions", parts)
     Soak.stateStoreConfs.foreach { case (k, v) => b.config(k, v) }

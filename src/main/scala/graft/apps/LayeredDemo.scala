@@ -145,8 +145,7 @@ object LayeredDemo {
   def main(args: Array[String]): Unit = {
     val outDir = if (args.nonEmpty) args(0) else "/tmp/graft_demo"
     val spark = graft.GraftSession.harness("local[8]", "8")
-      .appName("graft-layered-demo")
-      .withExtensions(new graft.functions.GraftExtensions).getOrCreate()
+      .appName("graft-layered-demo").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val counts = runAll(spark, outDir)
     counts.foreach { case (l, c) => println(f"$l%-28s $c%6d rows") }

@@ -492,7 +492,6 @@ object Soak {
     val parts = sys.env.getOrElse("SPARK_GRAFT_SOAK_PARTITIONS",
       if (prod) "4096" else "8")
     val b0 = graft.GraftSession.harness("local[8]", parts).appName("graft-soak")
-      .withExtensions(new graft.functions.GraftExtensions)
     val b = if (prod) graft.GraftSession.withProductionConfs(b0) else b0
     b.config("spark.sql.shuffle.partitions", parts)
     stateStoreConfs.foreach { case (k, v) => b.config(k, v) }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -152,13 +152,6 @@ case class EditDistBounded(left: Expression, right: Expression, k: Int)
 
 object EditDistOps {
   import org.apache.spark.sql.functions.{call_function, lit}
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "edit_dist_bounded",
-      exprs => EditDistBounded(exprs.head, exprs(1),
-        exprs(2).eval(null).asInstanceOf[Number].intValue()),
-      "scala_udf")
 
   def edit_dist_bounded(a: Column, b: Column, k: Int): Column =
     call_function("edit_dist_bounded", a, b, lit(k))

@@ -2,45 +2,48 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extensions: registers the engine's native functions at session
-  * build time, so `spark.sql.extensions=graft.functions.GraftExtensions`
-  * (or `GraftSession.*`, which wires it) makes `vec_dot` available to
-  * every query and SQL string without per-query registration.
+/** The engine's session recipe: its native SQL functions and the
+  * band-join optimizer rule ([[graft.plans.BandJoinRewrite]]), installed
+  * once, when a session is built. This is the only place either is
+  * registered; no query registers a function or a rule, so what a
+  * session resolves and how it optimizes do not depend on which queries
+  * ran before.
+  *
+  * Every session `graft.GraftSession` builds carries it, and so does
+  * every `newSession()` and streaming clone of one. A session built any
+  * other way needs `spark.sql.extensions=graft.functions.GraftExtensions`:
+  * without it, a query that calls a native function fails at analysis
+  * with `UNRESOLVED_ROUTINE` naming the function, and band joins plan as
+  * nested-loop joins.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VecDot(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("winnow_sketch"),
-      new ExpressionInfo(classOf[WinnowSketch].getName, "winnow_sketch"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WinnowSketch(exprs.head,
-          exprs(1).eval(null).asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("gram_hashes"),
-      new ExpressionInfo(classOf[GramHashes].getName, "gram_hashes"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GramHashes(exprs.head,
-          exprs(1).eval(null).asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("topk_by"),
-      new ExpressionInfo(classOf[TopKBy].getName, "topk_by"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        TopKBy(exprs(0), exprs(1), exprs(2)).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("heavy_hitters"),
-      new ExpressionInfo(classOf[HeavyHitters].getName, "heavy_hitters"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        HeavyHitters(exprs(0), exprs(1)).toAggregateExpression()))
-    // band-join → granule-bucketed equi-join rewrite (see
-    // graft.plans.BandJoinRewrite; spark.graft.bandJoin.enabled=false
-    // to disable)
-    e.injectOptimizerRule(graft.plans.BandJoinRewrite)
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      e.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
+    e.injectOptimizerRule(_ => graft.plans.BandJoinRewrite)
   }
+}
+
+object GraftExtensions {
+  /** A literal size argument, read once when the call is analyzed. */
+  private def int(e: Expression): Int =
+    e.eval(null).asInstanceOf[Number].intValue()
+
+  /** (SQL name, expression class, builder) of every native function. */
+  private val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] =
+    Seq(
+      ("vec_dot", classOf[VecDot], a => VecDot(a(0), a(1))),
+      ("winnow_sketch", classOf[WinnowSketch], a => WinnowSketch(a(0), int(a(1)))),
+      ("gram_hashes", classOf[GramHashes], a => GramHashes(a(0), int(a(1)))),
+      ("edit_dist_bounded", classOf[EditDistBounded],
+        a => EditDistBounded(a(0), a(1), int(a(2)))),
+      ("lcp_len", classOf[LcpLen], a => LcpLen(a(0), a(1), a(2), a(3))),
+      ("topk_by", classOf[TopKBy],
+        a => TopKBy(a(0), a(1), a(2)).toAggregateExpression()),
+      ("heavy_hitters", classOf[HeavyHitters],
+        a => HeavyHitters(a(0), a(1)).toAggregateExpression()))
 }

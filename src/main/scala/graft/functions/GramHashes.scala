@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -103,13 +103,6 @@ case class GramHashes(child: Expression, n: Int) extends UnaryExpression {
 /** Column-level entry point; same registry bridge as [[VecOps]]. */
 object GramOps {
   import org.apache.spark.sql.functions.{call_function, lit}
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_hashes",
-      exprs => GramHashes(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue()),
-      "scala_udf")
 
   def gram_hashes(c: Column, n: Int): Column =
     call_function("gram_hashes", c, lit(n))

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -139,15 +138,6 @@ case class HeavyHitters(item: Expression, mExpr: Expression,
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): HeavyHitters =
     copy(item = newChildren(0), mExpr = newChildren(1))
-}
-
-object HeavyHitters {
-  /** Idempotent session registration; use via
-    * `call_function("heavy_hitters", itemCol, lit(m))`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "heavy_hitters", exprs => HeavyHitters(exprs(0), exprs(1)).toAggregateExpression(),
-      "scala_udf")
 }
 
 /** Shared analysis-time validation for size parameters of the native

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -92,12 +92,6 @@ case class LcpLen(first: Expression, second: Expression,
 
 object LcpOps {
   import org.apache.spark.sql.functions.call_function
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lcp_len",
-      exprs => LcpLen(exprs.head, exprs(1), exprs(2), exprs(3)),
-      "scala_udf")
 
   def lcp_len(a: Column, apos: Column, b: Column, bpos: Column): Column =
     call_function("lcp_len", a, apos, b, bpos)

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -142,13 +141,4 @@ case class TopKBy(value: Expression, key: Expression, kExpr: Expression,
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): TopKBy =
     copy(value = newChildren(0), key = newChildren(1), kExpr = newChildren(2))
-}
-
-object TopKBy {
-  /** Idempotent session registration; use via
-    * `call_function("topk_by", valueCol, keyCol, lit(k))`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_by", exprs => TopKBy(exprs(0), exprs(1), exprs(2)).toAggregateExpression(),
-      "scala_udf")
 }

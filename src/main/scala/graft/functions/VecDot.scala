@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -89,13 +89,10 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
 /** Column-level entry points for the native vector ops. Spark 4 keeps
   * `Column ↔ Expression` bridges private, so the expression goes through
   * the session function registry (`call_function` resolves it at
-  * analysis). [[register]] is idempotent; query entry points call it. */
+  * analysis), where [[GraftExtensions]] installs it when the session is
+  * built. */
 object VecOps {
   import org.apache.spark.sql.functions.{call_function, sqrt}
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs(0), exprs(1)), "scala_udf")
 
   def vec_dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -81,13 +81,6 @@ case class WinnowSketch(child: Expression, k: Int) extends UnaryExpression {
 /** Column-level entry point; same registry bridge as [[VecOps]]. */
 object WinnowOps {
   import org.apache.spark.sql.functions.{call_function, lit}
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_sketch",
-      exprs => WinnowSketch(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue()),
-      "scala_udf")
 
   def winnow_sketch(c: Column, k: Int): Column =
     call_function("winnow_sketch", c, lit(k))

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -44,18 +43,14 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *     (int/long), and a non-negative foldable literal.
   *
   * The rewritten join contains an equi key, so the rule cannot re-fire
-  * on its own output (fixed-point safe). Disable with
-  * `spark.graft.bandJoin.enabled=false`.
+  * on its own output (fixed-point safe). `graft.functions.GraftExtensions`
+  * installs it on every session the engine builds.
   *
   * Ref: the reference's interval join (stream-stream ±5 s,
   * IntervalJoinFunction) — q22/q100 implement it manually; this rule
   * generalizes the plan rewrite to any band predicate.
   */
-case class BandJoinRewrite(session: SparkSession)
-    extends Rule[LogicalPlan] with PredicateHelper {
-
-  private def enabled: Boolean =
-    session.conf.get("spark.graft.bandJoin.enabled", "true") == "true"
+object BandJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   private def isIntegral(e: Expression): Boolean = e.dataType match {
     case IntegerType | LongType => true
@@ -123,7 +118,6 @@ case class BandJoinRewrite(session: SparkSession)
     }.flatten.headOption
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
     plan transform {
       case j @ Join(left, right, Inner, Some(cond), hint)
           if j.resolved && cond.deterministic &&

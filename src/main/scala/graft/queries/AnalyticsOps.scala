@@ -98,7 +98,6 @@ object AnalyticsOps {
   /** The depth-4 × width-256 cell table over the corpus token stream
     * (items = `gram_hashes(text, 1)` unigram hashes). */
   private def cells(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     val arr = Salts.map { case (a, b) => cellSql("h", a, b) }
       .mkString("array(", ", ", ")")
     Tables.documents(s, d)
@@ -116,7 +115,6 @@ object AnalyticsOps {
     * their exact counts. est = min over rows of the word's cell — never
     * below exact (one-sided error, pinned in AnalyticsOpsSpec). */
   def cmsEstimate(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     val arr = Salts.map { case (a, b) => cellSql("h", a, b) }
       .mkString("array(", ", ", ")")
     val top = Tables.documents(s, d)
@@ -202,7 +200,6 @@ object AnalyticsOps {
     * from the source are the same word. Pair sums in DECIMAL(38,0):
     * exact for any nᵢ ≤ 10¹⁹. */
   def simpsonDiversity(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     Tables.documents(s, d)
       .select(col("source"), explode(expr("gram_hashes(text, 1)")).as("h"))
       .groupBy(col("source"), col("h")).agg(count(lit(1)).as("n"))

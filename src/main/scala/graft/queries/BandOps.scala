@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * DIFFERENT users within one second of each other, counted per user
   * pair. The Spark code states the NATURAL predicate — an inner join
   * on `abs(t_a − t_b) <= 1s ∧ user_a < user_b` with no equi key — and
-  * relies on the injected [[graft.plans.BandJoinRewrite]] optimizer
-  * rule for the scale plan: the rule rewrites the would-be
+  * relies on the [[graft.plans.BandJoinRewrite]] optimizer rule, which
+  * every engine session carries from its build (`GraftExtensions`), for
+  * the scale plan: the rule rewrites the would-be
   * BroadcastNestedLoopJoin into a granule-bucketed equi-join
   * automatically (the q22/q100 device, now applied by the engine, not
   * the query author). The spec pins the plan shape; the DuckDB oracle
@@ -25,19 +26,7 @@ object BandOps {
 
   private val WindowUs = 1000000L // 1 second
 
-  /** Idempotently ensure the rewrite rule is active on `s` — queries
-    * must not depend on how the session was built (the same contract
-    * as per-query native-function registration). */
-  private def ensureRule(s: SparkSession): Unit = {
-    val has = s.experimental.extraOptimizations
-      .exists(_.isInstanceOf[graft.plans.BandJoinRewrite])
-    if (!has)
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.BandJoinRewrite(s)
-  }
-
   def eventCoincidence(s: SparkSession, d: String): DataFrame = {
-    ensureRule(s)
     val ev = Tables.events(s, d)
       .select(col("user_id"), expr("unix_micros(ts)").as("t"))
     val a = ev.select(col("user_id").as("user_a"), col("t").as("ta"))

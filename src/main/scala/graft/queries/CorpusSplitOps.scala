@@ -105,7 +105,6 @@ object CorpusSplitOps {
 
   /** q337: exact-twin + 8-gram leakage per eval split. */
   def splitLeakage(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("text"), splitOf.as("split"))
     val trainMd5 = docs.filter(col("split") === "train")

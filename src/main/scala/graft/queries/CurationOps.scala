@@ -39,7 +39,6 @@ object CurationOps {
     * ships the sketch alone: one exchange of ≤ m entries per map task
     * vs the exact plan's shuffle of every distinct token. */
   def heavyHitterWords(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HeavyHitters.register(s)
     val w = TextOps.words(s, d)
     val sk = w.agg(
       call_function("heavy_hitters", col("word"), lit(32)).as("summary"),
@@ -66,7 +65,6 @@ object CurationOps {
     * (summary content is merge-order dependent) with the MG bounds
     * property-tested in HeavyHittersSpec. */
   def groupedHeavyHitters(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HeavyHitters.register(s)
     val w = Tables.documents(s, d).select(col("source"), col("lang"),
       explode(split(col("text"), " ")).as("word"))
     w.groupBy("source", "lang")
@@ -105,8 +103,6 @@ object CurationOps {
     * n-grams, where the operative guarantee kicks in: anything with
     * freq > n/(m+1) is PRESENT in the summary. */
   def cooccurHeavyHitters(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
-    graft.functions.HeavyHitters.register(s)
     val docs = Tables.documents(s, d)
     val grams = docs.select(
       explode(graft.functions.GramOps.gram_hashes(col("text"), 2)).as("gh"))
@@ -176,7 +172,6 @@ object CurationOps {
     * sorts the ENTIRE corpus by source — 20 partitions for 100 TB, pure
     * skew; this plan never moves the fact table at all. */
   def sourceQuota(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TopKBy.register(s)
     val docs = Tables.documents(s, d)
     val kept = docs
       .select(col("source"), col("doc_id"), (-quotaPriority).as("pri"))
@@ -274,7 +269,6 @@ object CurationOps {
     * jaccard_ppm is integer fixed-point: `(|A∩B| · 10⁶) div |A∪B|`
     * (the q134 rule — no IEEE division anywhere near the oracle). */
   def sourceOverlap(s: SparkSession, d: String): DataFrame = {
-    GramOps.register(s)
     val g = Tables.documents(s, d)
       .select(col("source"),
         explode(GramOps.gram_hashes(col("text"), OvN)).as("h"))
@@ -318,7 +312,6 @@ object CurationOps {
     * projection — at 100 TB the epoch materializes with zero
     * shuffles beyond the two counts. */
   def temperatureMix(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     val docs = Tables.documents(s, d).select(col("source"), col("doc_id"))
     val counts = docs.groupBy("source").agg(count(lit(1)).as("n_docs"))
     val w = counts.withColumn("w",
@@ -362,7 +355,6 @@ object CurationOps {
     * epoch materialization would `explode(sequence(1, reps))`, a
     * bounded map-side blow-up by construction). */
   def epochRealize(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     val docs = Tables.documents(s, d).select(col("source"), col("doc_id"))
     val counts = docs.groupBy("source").agg(count(lit(1)).as("n_docs"))
     val w = counts.withColumn("w",

@@ -176,7 +176,6 @@ object CurveOps {
     * can drive the leaderboard. Everything deterministic (the salted
     * polynomial inclusion hash — the q195 affine-trap-safe device). */
   def topkStability(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     val li = Tables.lineitem(s, d).select(col("l_partkey"),
       expr("CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100" +
         " AS BIGINT)").as("cents"),

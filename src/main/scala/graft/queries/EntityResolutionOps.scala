@@ -44,7 +44,6 @@ object EntityResolutionOps {
   /** Block + match over a one-column (`c_name`) frame of entity names. */
   private[queries] def nameEdges(s: SparkSession, raw: DataFrame)
       : DataFrame = {
-    graft.functions.EditDistOps.register(s)
     val names = raw.select(col("c_name")).distinct()
       .select(col("c_name"), substring(col("c_name"), 1, 16).as("blk"))
     // salted sub-blocking + CPU-parallelism pin (Skew.blockSaltedSides)
@@ -133,7 +132,6 @@ object EntityResolutionOps {
     * c_nationkey, c_mktsegment, c_acctbal). */
   private[queries] def fsWeightsOf(s: SparkSession, cust: DataFrame)
       : DataFrame = {
-    graft.functions.EditDistOps.register(s)
     val attrs = cust
       .groupBy(col("c_name"))
       .agg(expr("min_by(c_nationkey, c_custkey)").as("nat"),

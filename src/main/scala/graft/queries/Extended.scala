@@ -294,7 +294,6 @@ object Extended3 {
     * aggregate returns an ordered array; we posexplode it to scalar
     * (p_brand, rank, p_partkey) rows so the result is hash-comparable. */
   def topkAgg(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TopKBy.register(s)
     Tables.part(s, d)
       .groupBy("p_brand")
       .agg(call_function("topk_by", col("p_retailprice"), col("p_partkey"),
@@ -308,7 +307,6 @@ object Extended3 {
     * supplier names by account balance per nation. Same bounded-heap
     * plan; string keys serialize as UTF-8 in the partial buffers. */
   def topkAggString(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TopKBy.register(s)
     Tables.supplier(s, d)
       .groupBy(col("s_nationkey").cast("long").as("nation_key"))
       .agg(call_function("topk_by", col("s_acctbal"), col("s_name"),

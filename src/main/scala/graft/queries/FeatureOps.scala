@@ -30,7 +30,6 @@ object FeatureOps {
 
   /** q224: per-fold census for 5-fold CV. */
   def kfoldAssign(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     Tables.documents(s, d)
       .withColumn("fold",
         expr("element_at(gram_hashes(concat(CAST(doc_id AS STRING)," +
@@ -45,7 +44,6 @@ object FeatureOps {
 
   /** q225: 256-bucket feature-hash census over the corpus vocabulary. */
   def featureHashing(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     val w = TextOps.words(s, d)
       .groupBy(col("word")).agg(count(lit(1)).as("f"))
       .select(expr(s"element_at(gram_hashes(word, 1), 1) % $Buckets")
@@ -68,7 +66,6 @@ object FeatureOps {
     * then-compare rule: vocabulary pairs, not row pairs); the banded
     * DP is what keeps the verify step linear in name length. */
   def editDistPairs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.EditDistOps.register(s)
     val names = Tables.customer(s, d).select(col("c_name")).distinct()
       .select(col("c_name"), substring(col("c_name"), 1, 16).as("blk"))
     // same salted sub-blocking + CPU-parallelism pin as the ER match

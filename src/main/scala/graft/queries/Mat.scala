@@ -21,9 +21,8 @@ import org.apache.spark.sql.functions.{count, lit}
   *
   * `stable(df)` is the one switch point, and since r12 EVERY
   * `graft.queries` materialization routes through it (`.stable()` via
-  * [[StableOps]]): with `spark.graft.reliableCheckpoint=true` (or env
-  * `SPARK_GRAFT_RELIABLE_CHECKPOINT=1` when the conf is unset) it uses
-  * a RELIABLE `checkpoint()` instead — partitions written to the
+  * [[StableOps]]): with `spark.graft.reliableCheckpoint=true` (or `1`)
+  * it uses a RELIABLE `checkpoint()` instead — partitions written to the
   * checkpoint directory (shared storage on a real cluster: HDFS/S3;
   * here the local FS), which SURVIVES executor loss. Both forms are
   * eager and both truncate lineage, so plan shape and results are
@@ -49,15 +48,13 @@ import org.apache.spark.sql.functions.{count, lit}
 object Mat {
   val ConfKey = "spark.graft.reliableCheckpoint"
 
-  /** Lenient boolean parse, identical for the conf and env paths —
-    * `spark.conf.set(ConfKey, "1")` must enable the hatch, not throw
-    * from deep inside query construction (code-review r12). */
+  /** Lenient boolean parse — `spark.conf.set(ConfKey, "1")` must enable
+    * the hatch, not throw from deep inside query construction. */
   private def truthy(v: String): Boolean =
     v.equalsIgnoreCase("true") || v == "1"
 
   def reliableEnabled(df: DataFrame): Boolean =
-    df.sparkSession.conf.getOption(ConfKey).map(truthy).getOrElse(
-      sys.env.get("SPARK_GRAFT_RELIABLE_CHECKPOINT").exists(truthy))
+    df.sparkSession.conf.getOption(ConfKey).exists(truthy)
 
   def stable(df: DataFrame): DataFrame =
     if (!reliableEnabled(df)) df.localCheckpoint()

@@ -35,7 +35,6 @@ object PipelineOps {
     * overlap semantics differ from verbatim-string overlap only on
     * polynomial collisions (≈ |bench|·|train|/P — about 1e-9 here). */
   private def grams(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
         explode(graft.functions.GramOps.gram_hashes(col("text"), N)).as("gram"))
@@ -308,10 +307,6 @@ object PipelineOps {
         sum(when(col("keep"), 1L).otherwise(0L)).as("docs_kept"))
   }
 
-  private def withVecFns(f: (SparkSession, String) => DataFrame)
-      : (SparkSession, String) => DataFrame =
-    (s, d) => { graft.functions.VecOps.register(s); f(s, d) }
-
   /** q154: the dataset card — one row per (source, lang) with the
     * volume / duplication / diversity / length statistics a corpus
     * release publishes (the "datasheet" table every training-data
@@ -414,7 +409,7 @@ object PipelineOps {
     "q281_gate_attribution" -> gateAttribution,
     "q116_decontamination" -> decontamination,
     "q117_gopher_quality" -> gopherQuality,
-    "q118_semdedup" -> withVecFns((s, d) => semDedup(s, d)),
+    "q118_semdedup" -> ((s, d) => semDedup(s, d)),
     "q119_curated_corpus" -> curatedCorpus,
     "q120_quality_sampling" -> qualitySampling,
     "q144_curated_learned" -> curatedCorpusLearned,

@@ -63,7 +63,6 @@ object RankingOps {
     * differs from string-equality only on polynomial collisions
     * (≈ m²/2P ≈ 1e-6 at a million distinct grams — see GramHash). */
   def dupNgramStats(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     val grams = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("source"),
         explode(graft.functions.GramOps.gram_hashes(col("text"), 8)).as("gram"))
@@ -101,7 +100,6 @@ object RankingOps {
     * is rebuilt from token positions, so it is engine-exact and carries
     * a full-text oracle. */
   def spanDedup(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     val docs = Tables.documents(s, d)
     val grams = docs.select(col("doc_id"),
       posexplode(graft.functions.GramOps.gram_hashes(col("text"), 8))

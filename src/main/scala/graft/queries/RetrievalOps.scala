@@ -112,7 +112,6 @@ object RetrievalOps {
     * shape (block-max / impact-ordered prefixes).
     */
   def postingLists(s: SparkSession, d: String): DataFrame = {
-    graft.functions.TopKBy.register(s)
     val terms = Tables.documents(s, d)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= 2)
@@ -180,7 +179,6 @@ object RetrievalOps {
     * Output: (doc_id, lex_rank, vec_rank, rrf_ppm) — top-10. */
   def hybridRrf(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VecOps.register(s)
     val lex = bm25Scores(s, d)
       .orderBy(desc("score_ppm"), asc("doc_id")).limit(FuseK)
       .withColumn("lex_rank", row_number().over(

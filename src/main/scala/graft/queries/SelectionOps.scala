@@ -59,7 +59,6 @@ object SelectionOps {
     * [[graft.functions.GramHashes]] loop; its value is in [0, P), so
     * plain `% B` is already non-negative in both engines. */
   private def feats(s: SparkSession, d: String): DataFrame = {
-    GramOps.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         explode(GramOps.gram_hashes(col("text"), 2)).as("h"))

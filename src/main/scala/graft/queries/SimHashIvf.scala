@@ -235,7 +235,6 @@ object SimHashIvf {
     * as the float trained probe. */
   def quantizedIvfTrained(s: SparkSession, d: String, probes: Seq[Int],
       iterations: Int = 5): DataFrame = {
-    graft.functions.VecOps.register(s)
     val cents = kmeansTrain(s, d, iterations)._1
     quantizedIvfBody(s, d,
       cents.indices.map { c =>
@@ -248,7 +247,6 @@ object SimHashIvf {
       scores: Seq[Column], probes: Seq[Int]): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VecOps.register(s)
     val k = scores.length
     val best = greatest(scores: _*)
     val cell = (0 until k).foldRight(lit(-1)) { (c, acc) =>
@@ -374,7 +372,6 @@ object SimHashIvf {
       cents: Array[Array[Double]], nprobe: Int): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VecOps.register(s)
     val k = cents.length
     // argmin ‖x−c‖² over c ≡ argmax (x·c − ‖c‖²/2); ties → lowest index
     val scores = (0 until k).map { c =>
@@ -404,18 +401,14 @@ object SimHashIvf {
       .limit(10)
   }
 
-  private def withVecFns(f: (SparkSession, String) => DataFrame)
-      : (SparkSession, String) => DataFrame =
-    (s, d) => { graft.functions.VecOps.register(s); f(s, d) }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q36_simhash" -> ((s: SparkSession, d: String) => simhash(s, d)),
     "q37_simhash_buckets" -> ((s: SparkSession, d: String) => simhashBuckets(s, d)),
-    "q38_ivf_cells" -> withVecFns(ivfCells),
-    "q39_ann_ivf" -> withVecFns(annIvf),
-    "q93_kmeans_step" -> withVecFns(kmeansStep),
-    "q98_ann_ivf_nprobe2" -> withVecFns(annIvfMultiProbe),
-    "q131_quantized_ivf" -> withVecFns((s, d) => quantizedIvfRecall(s, d)))
+    "q38_ivf_cells" -> ivfCells,
+    "q39_ann_ivf" -> annIvf,
+    "q93_kmeans_step" -> kmeansStep,
+    "q98_ann_ivf_nprobe2" -> annIvfMultiProbe,
+    "q131_quantized_ivf" -> ((s, d) => quantizedIvfRecall(s, d)))
 
   // ---- oracle twins ----
 

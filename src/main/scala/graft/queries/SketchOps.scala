@@ -46,8 +46,6 @@ object SketchOps {
     * long-key tie-break resolves any double rounding collision, so the
     * selected SET is exactly the K order statistics. */
   private def sketches(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
-    graft.functions.TopKBy.register(s)
     Tables.documents(s, d)
       .select(col("source"),
         explode(expr(s"gram_hashes(text, $GramN)")).as("h"))
@@ -124,7 +122,6 @@ object SketchOps {
     * (observed: 5× the target size and a 5× HT bias; the q163
     * affine-degeneracy trap in sampling form). */
   def ppsSample(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("n_chars"))
     val w = docs.agg(sum(col("n_chars")).as("tot_w"))
@@ -164,7 +161,6 @@ object SketchOps {
     * global sort); the estimator then aggregates k rows. The same
     * affine-degeneracy rule as q195 applies to the hash choice. */
   def prioritySample(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     val pri = Tables.documents(s, d)
       .select(col("doc_id"), col("n_chars"))
       .withColumn("h",

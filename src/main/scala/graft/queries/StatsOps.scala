@@ -157,7 +157,6 @@ object StatsOps {
     * Replicate means are exact integer ratios; the p5/p95 band comes
     * from ordering the 32-row replicate frame. */
   def poissonBootstrap(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     val rev = Tables.orders(s, d)
       .groupBy(col("o_custkey"))
       .agg(sum(expr("CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100" +

@@ -318,7 +318,6 @@ object SuffixOps {
     * the lifting handled with an explicit `least`. */
   private def orderedLcps(
       s: SparkSession, d: String, cap: Int): (DataFrame, DataFrame) = {
-    graft.functions.LcpOps.register(s)
     val ordered = orderedSuffixes(s, d, cap).stable()
     // rank-adjacent pairs, keyed by the FIRST row's index
     val pairs = ordered.join(
@@ -517,7 +516,6 @@ object SuffixOps {
 
   private[graft] def contaminationCompareAt(
       s: SparkSession, d: String, cap: Int): DataFrame = {
-    graft.functions.GramOps.register(s)
     val docs = Tables.documents(s, d).filter(col("doc_id") < cap)
     val g = docs.select(col("doc_id"),
       explode(graft.functions.GramOps.gram_hashes(col("text"), 8))

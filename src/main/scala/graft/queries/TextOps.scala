@@ -132,7 +132,6 @@ object TextOps {
     * MinHash+LSH). Min over the multiset = min over the set, so no
     * per-doc distinct is needed before the aggregate. */
   def minhashSignatures(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     words(s, d)
       .groupBy("doc_id")
       .agg(
@@ -213,7 +212,6 @@ object TextOps {
     // strings, no per-shingle concat, 8-byte longs through the distinct,
     // df filter and candidate self-join (the dominant shuffle payload of
     // this chain at scale); the oracle states the identical hash
-    graft.functions.GramOps.register(s)
     val shingles = Tables.documents(s, d)
       .filter(col("doc_id") < 100)
       .select(col("doc_id"),
@@ -258,7 +256,6 @@ object TextOps {
     * is one double division of identical operands (engine-stable). Pure
     * per-document map + aggregate — embarrassingly parallel at 100 TB. */
   def repetitionRatio(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         explode(graft.functions.GramOps.gram_hashes(col("text"), 3))
@@ -289,7 +286,6 @@ object TextOps {
     }.mkString(" + ")
 
   private def winnowSketchCol(s: SparkSession, k: Int): Column = {
-    graft.functions.WinnowOps.register(s)
     graft.functions.WinnowOps.winnow_sketch(col("text"), k)
   }
 
@@ -365,7 +361,6 @@ object TextOps {
     * construction (hot tokens sort to the suffix). The length filter
     * min·100 ≥ t·max prunes before verification. */
   def ppjoin(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     val shingles = Tables.documents(s, d)
       .filter(col("doc_id") < 100)
       .select(col("doc_id"),

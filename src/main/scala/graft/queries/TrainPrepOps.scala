@@ -122,7 +122,6 @@ object TrainPrepOps {
 
   /** q334: per-doc distinct 8-grams + first-occurrence novelty. */
   def ngramNovelty(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GramOps.register(s)
     val grams = Tables.documents(s, d)
       .select(col("doc_id"),
         explode(graft.functions.GramOps.gram_hashes(col("text"), 8))

@@ -227,17 +227,13 @@ object VectorOps {
       .limit(10)
   }
 
-  private def withVecFns(f: (SparkSession, String) => DataFrame)
-      : (SparkSession, String) => DataFrame =
-    (s, d) => { graft.functions.VecOps.register(s); f(s, d) }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q32_embedding_stats" -> withVecFns(embeddingStats),
-    "q33_cosine_topk" -> withVecFns(cosineTopK),
-    "q34_ann_lsh_buckets" -> withVecFns(annLshBuckets),
-    "q35_cosine_pairs" -> withVecFns((s, d) => cosinePairs(s, d)),
-    "q114_embedding_dedup" -> withVecFns(embeddingDedup),
-    "q129_quantized_topk" -> withVecFns(quantizedTopK))
+    "q32_embedding_stats" -> embeddingStats,
+    "q33_cosine_topk" -> cosineTopK,
+    "q34_ann_lsh_buckets" -> annLshBuckets,
+    "q35_cosine_pairs" -> ((s, d) => cosinePairs(s, d)),
+    "q114_embedding_dedup" -> embeddingDedup,
+    "q129_quantized_topk" -> quantizedTopK)
 
   // DuckDB oracle twins. The fold shape mirrors Spark exactly.
   private def duckDot(a: String, b: String): String =

@@ -119,9 +119,6 @@ object CpuScaling {
 
   private def session(cpus: Int): SparkSession = {
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    GraftSession.harness(s"local[$cpus]", cpus.toString).getOrCreate()
   }
 }

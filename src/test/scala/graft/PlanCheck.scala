@@ -1,16 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc plan inspector (test scope): prints formatted plans for key
   * queries so the shuffle/broadcast/pushdown shape can be reviewed. */
 object PlanCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.harness("local[8]", "8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.01"
     args.foreach { q =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc profile bisect (test scope): time one SparkEntry query under
   * an arbitrary set of conf overrides, to attribute production-profile
   * slowdowns to a specific knob. Usage:
@@ -12,12 +10,7 @@ import org.apache.spark.sql.SparkSession
 object ProfileBisect {
   def main(args: Array[String]): Unit = {
     val q = args(0)
-    val b = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val b = GraftSession.harness("local[32]", "32")
     args.drop(1).filter(_.contains("=")).foreach { kv =>
       val Array(k, v) = kv.split("=", 2); b.config(k, v)
     }

@@ -134,10 +134,7 @@ object ScaleLaw {
       "pass exactly three sizes or none")
     val out = sys.env.getOrElse("GRAFT_SCALELAW_OUT", "SCALELAW_r15.json")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.harness("local[32]", "32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val plan = Seq(

@@ -376,109 +376,76 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("yield")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val spark = GraftSession.harness("local[32]", "32").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       yieldProbe(spark, if (args.length > 1)
         args.drop(1).toSeq.map(_.toInt) else Seq(5000, 15000, 45000))
       spark.stop(); return
     }
     if (args.headOption.contains("lsheval")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val spark = GraftSession.harness("local[32]", "32").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       lshEvalProbe(spark, if (args.length > 1)
         args.drop(1).toSeq.map(_.toInt) else Seq(5000, 15000, 45000))
       spark.stop(); return
     }
     if (args.headOption.contains("sssp")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val spark = GraftSession.harness("local[32]", "32").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       ssspProbe(spark, if (args.length > 1)
         args.drop(1).toSeq.map(_.toInt) else Seq(250000, 1000000, 4000000))
       spark.stop(); return
     }
     if (args.headOption.contains("triangle")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val spark = GraftSession.harness("local[32]", "32").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       triangleProbe(spark, if (args.length > 1)
         args.drop(1).toSeq.map(_.toInt) else Seq(6000, 20000))
       spark.stop(); return
     }
     if (args.headOption.contains("cumsum")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val spark = GraftSession.harness("local[32]", "32").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       cumsumProbe(spark, if (args.length > 1)
         args.drop(1).toSeq.map(_.toLong) else Seq(1500000L, 15000000L))
       spark.stop(); return
     }
     if (args.headOption.contains("er")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val spark = GraftSession.harness("local[32]", "32").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       erProbe(spark, if (args.length > 1) args.drop(1).toSeq.map(_.toInt)
         else Seq(15000, 150000))
       spark.stop(); return
     }
     if (args.headOption.contains("curve")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val spark = GraftSession.harness("local[32]", "32").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       curveProbe(spark, Seq(1, 10), Seq(100, 300, 1000))
       spark.stop(); return
     }
     if (args.headOption.contains("rebuild")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val spark = GraftSession.harness("local[32]", "32").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       rebuildProbe(spark, if (args.length > 1)
         args.drop(1).toSeq.map(_.toInt) else Seq(250, 1000, 5000))
       spark.stop(); return
     }
     if (args.headOption.contains("suffixsyn")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val spark = GraftSession.harness("local[32]", "32").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       suffixSynProbe(spark, if (args.length > 1)
         args.drop(1).toSeq.map(_.toInt) else Seq(5000, 20000))
       spark.stop(); return
     }
     if (args.headOption.contains("suffix")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val spark = GraftSession.harness("local[32]", "32").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       suffixProbe(spark, if (args.length > 1) args.drop(1).toSeq.map(_.toInt)
         else Seq(100, 300, 1000))
       spark.stop(); return
     }
     if (args.headOption.contains("skew")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val spark = GraftSession.harness("local[32]", "32").getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
       args.drop(1).headOption.map(_.toInt).map(Seq(_))
         .getOrElse(Seq(1000, 5000, 10000)).foreach(skewProbe(spark, _))
@@ -488,10 +455,7 @@ object ScaleProbe {
     val qs = if (args.length > 1) args.drop(1).toSeq
       else Seq("q01_pricing_summary", "q04_join_inner", "q13_window_tumble_10s",
         "q16_dedup_keep_first", "q23_word_count", "q29_minhash_signatures")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.harness("local[32]", "32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val src = "/root/testdata/sf0.1"
     val dst = s"/tmp/scale_x$mult"

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc benchmark (test scope): salted vs plain shuffles on a
@@ -14,12 +13,9 @@ import org.apache.spark.sql.functions._
 object SkewBench {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.harness("local[32]", "32")
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.sql.autoBroadcastJoinThreshold", "-1").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val src = s"/tmp/skew_bench_x$mult"

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,12 +14,8 @@ import org.apache.spark.sql.functions._
 object TopKBench {
   def main(args: Array[String]): Unit = {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.harness("local[32]", "32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.TopKBy.register(spark)
 
     val src = s"/tmp/topk_bench_x$mult"
     if (!new java.io.File(src).exists()) {

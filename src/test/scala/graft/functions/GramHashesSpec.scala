@@ -56,7 +56,6 @@ class GramHashesSpec extends AnyFunSuite {
   }
 
   test("collision-free and window-exact on the sf0.001 corpus") {
-    GramOps.register(spark)
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
     val toks = split(col("text"), " ")
     val gramArr = when(size(toks) >= 8,

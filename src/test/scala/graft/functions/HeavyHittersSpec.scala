@@ -18,7 +18,6 @@ class HeavyHittersSpec extends AnyFunSuite {
   /** summary rows → (item → est). */
   private def summarize(df: org.apache.spark.sql.DataFrame, itemCol: String,
       m: Int, parts: Int): Map[String, Long] = {
-    HeavyHitters.register(spark)
     val rows = df.repartition(parts)
       .agg(call_function("heavy_hitters", col(itemCol), lit(m)).as("s"))
       .selectExpr("explode(s) AS e").select("e.item", "e.est")
@@ -73,8 +72,6 @@ class HeavyHittersSpec extends AnyFunSuite {
   }
 
   test("non-literal or non-positive m fails at analysis, not mid-job") {
-    HeavyHitters.register(spark)
-    TopKBy.register(spark)
     // column-valued m: must be rejected when the plan is analyzed
     val colM = intercept[Exception] {
       words.agg(call_function("heavy_hitters", col("word"),

@@ -17,7 +17,6 @@ class StreamingHeavyHittersSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("heavy_hitters summary survives state-store round trips per batch") {
-    HeavyHitters.register(spark)
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, String)]
     val m = 8

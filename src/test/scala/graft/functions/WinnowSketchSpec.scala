@@ -26,7 +26,6 @@ class WinnowSketchSpec extends AnyFunSuite {
 
   private def check(texts: Seq[String], k: Int): Unit = {
     import spark.implicits._
-    WinnowOps.register(spark)
     val df = texts.toDF("text")
       .select(col("text"),
         WinnowOps.winnow_sketch(col("text"), k).as("native"),
@@ -55,7 +54,6 @@ class WinnowSketchSpec extends AnyFunSuite {
 
   test("output is ascending and bounded by k and window count") {
     import spark.implicits._
-    WinnowOps.register(spark)
     val rows = Seq("abcdefghijklmnop", "zyxwvuts").toDF("text")
       .select(WinnowOps.winnow_sketch(col("text"), 3).as("sk"),
         length(col("text")).as("len"))
@@ -69,7 +67,6 @@ class WinnowSketchSpec extends AnyFunSuite {
 
   test("null text yields null sketch") {
     import spark.implicits._
-    WinnowOps.register(spark)
     val out = Seq[Option[String]](None, Some("abcdefgh")).toDF("text")
       .select(WinnowOps.winnow_sketch(col("text"), 5).as("sk")).collect()
     assert(out.exists(_.isNullAt(0)) && out.exists(!_.isNullAt(0)))

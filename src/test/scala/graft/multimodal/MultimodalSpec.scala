@@ -46,7 +46,6 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("media features flow into vector similarity ops") {
     import spark.implicits._
-    graft.functions.VecOps.register(spark)
     import graft.functions.VecOps._
     import org.apache.spark.sql.functions._
     val f = extractFeatures(media).toDF()

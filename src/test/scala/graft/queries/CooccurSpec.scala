@@ -14,7 +14,6 @@ class CooccurSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("q132 MG bounds + example↔hash consistency") {
-    graft.functions.GramOps.register(spark)
     val rows = CurationOps.cooccurHeavyHitters(spark, sf).collect()
     assert(rows.nonEmpty && rows.length <= 10)
     val exact = graft.Tables.documents(spark, sf)

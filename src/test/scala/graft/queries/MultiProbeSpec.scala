@@ -13,7 +13,6 @@ class MultiProbeSpec extends AnyFunSuite {
   private val d = "/root/testdata/sf0.001"
 
   test("nprobe=2 recall >= nprobe=1 recall vs brute force") {
-    graft.functions.VecOps.register(spark)
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.collect().map(_.getAs[Long]("vec_id")).toSet
     val brute = ids(VectorOps.cosineTopK(spark, d))

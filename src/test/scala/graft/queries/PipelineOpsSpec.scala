@@ -153,7 +153,6 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("semdedup: kept <= vecs, threshold monotone, thr>1 keeps everything") {
-    graft.functions.VecOps.register(spark)
     val base = PipelineOps.semDedup(spark, d).collect()
     base.foreach { r =>
       assert(r.getLong(r.fieldIndex("n_kept")) <= r.getLong(r.fieldIndex("n_vecs")))
@@ -170,7 +169,6 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("semdedup: drops are cluster-local — one representative per cluster") {
-    graft.functions.VecOps.register(spark)
     // With a threshold below -1 every within-cluster pair "matches", so
     // exactly the non-minimum vec of every cluster is dropped: the kept
     // count equals the number of GLOBALLY distinct clusters (note the

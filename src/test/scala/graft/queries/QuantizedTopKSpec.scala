@@ -18,7 +18,6 @@ class QuantizedTopKSpec extends AnyFunSuite {
       lit(0.0), (acc, x) => acc + x)
 
   test("quantization error stays inside the analytic half-step bound") {
-    graft.functions.VecOps.register(spark)
     val e = graft.Tables.embeddings(spark, sf)
       .withColumn("ma",
         array_max(transform(col("embedding"), x => abs(x.cast("double")))))
@@ -45,7 +44,6 @@ class QuantizedTopKSpec extends AnyFunSuite {
   }
 
   test("quantized top-10 recovers the exact-dot top-10 (measured overlap)") {
-    graft.functions.VecOps.register(spark)
     import graft.functions.VecOps.vec_dot
     val e = graft.Tables.embeddings(spark, sf)
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qemb"))

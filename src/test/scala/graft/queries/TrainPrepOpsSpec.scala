@@ -70,7 +70,6 @@ class TrainPrepOpsSpec extends AnyFunSuite {
     assert(first._2 == first._3, "min doc_id owns every one of its grams")
     rows.foreach { case (_, g, nv) => assert(nv <= g) }
     // Σ novel = distinct grams in the corpus (each gram owned once)
-    graft.functions.GramOps.register(spark)
     import org.apache.spark.sql.functions._
     val universe = graft.Tables.documents(spark, sf)
       .select(explode(graft.functions.GramOps.gram_hashes(col("text"), 8))

@@ -16,13 +16,11 @@ class TrainedIvfSpec extends AnyFunSuite {
   private lazy val trained = SimHashIvf.kmeansTrain(spark, sf, 5)._1
 
   private def bruteTop10: Set[Long] = {
-    graft.functions.VecOps.register(spark)
     VectorOps.cosineTopK(spark, sf).collect().map(_.getLong(0)).toSet
   }
 
   test("trained cells partition the data") {
     import graft.functions.VecOps.vec_dot
-    graft.functions.VecOps.register(spark)
     val k = trained.length
     val scores = (0 until k).map { c =>
       val half = trained(c).map(v => v * v).sum / 2

@@ -11,7 +11,6 @@ class VectorOpsSpec extends AnyFunSuite {
     val brute = VectorOps.queries("q33_cosine_topk")(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     val full = {
-      graft.functions.VecOps.register(spark)
       import graft.functions.VecOps._
       import org.apache.spark.sql.functions._
       val e = graft.Tables.embeddings(spark, sf)
@@ -29,7 +28,6 @@ class VectorOpsSpec extends AnyFunSuite {
   }
 
   test("band-LSH cosinePairs recall matches the analytic capture probability") {
-    graft.functions.VecOps.register(spark)
     val sfDir = "/root/testdata/sf0.01" // 500 vectors → 990 true pairs at thr 0.3
     val vecs = graft.Tables.embeddings(spark, sfDir)
       .select("vec_id", "embedding").collect()
